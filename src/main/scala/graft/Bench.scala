@@ -118,11 +118,13 @@ object Bench {
     * deltas of this sweep vs the previous sidecar, largest first, at
     * most `cap` lines, only moves that clear BOTH 0.3 s and 25% —
     * purely observational stderr (the stdout contract and the timing
-    * methodology are untouched). Returns the lines so the spec can pin
-    * the format and the caps. */
+    * methodology are untouched). `failed` queries (any run crashed)
+    * are skipped: when every run crashed, the time is the crash time,
+    * not a reading.
+    * Returns the lines so the spec can pin the format and the caps. */
   def topMovers(prev: Map[String, Double], now: Map[String, Double],
-      cap: Int = 10): Seq[String] =
-    now.toSeq.flatMap { case (k, t) =>
+      failed: Set[String], cap: Int = 10): Seq[String] =
+    (now -- failed).toSeq.flatMap { case (k, t) =>
       prev.get(k).collect {
         case p if (t - p).abs >= 0.3 && (t - p).abs >= 0.25 * math.max(p, 0.001) =>
           (k, p, t)
@@ -356,7 +358,7 @@ object Bench {
       val prev = parseDetailBest(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("bench_detail.json")), "UTF-8"))
       val now = results.map { case (k, v, _, _) => (k, v) }.toMap
-      val movers = topMovers(prev, now)
+      val movers = topMovers(prev, now, failed.toSet)
       if (movers.nonEmpty) movers.foreach(System.err.println)
       else if (prev.nonEmpty)
         System.err.println("[bench] movers vs prev detail: none over 0.3s+25%")

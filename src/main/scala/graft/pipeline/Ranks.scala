@@ -103,8 +103,9 @@ object Ranks {
     * `bucketCol` (optional): the name of a caller-computed INT bucket
     * column replacing the device's linear value map — required weakly
     * monotone w.r.t. `valueCol` ascending (nulls first, NaN last,
-    * encoded by the caller; all callers today are non-null) with
-    * bounded cardinality. Use when the value distribution defeats a
+    * encoded by the caller) with bounded cardinality, and never null:
+    * a null bucket is ranked as if no bucket preceded it, so its ranks
+    * collide with the first bucket's. Use when the value distribution defeats a
     * linear map — e.g. Zipf counts, where the linear last bucket mixes
     * counts 1..maxCount/nBuckets and so is never single-valued; see
     * [[zipfCountBuckets]]. */

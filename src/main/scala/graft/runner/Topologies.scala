@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DiscussionTree, InteractionGraph, Lod, RoleAnalysis, TopicModel}
@@ -16,185 +16,157 @@ import graft.streaming.PunctuationWindow
   *
   * Windowing: the role-analysis and interaction-graph topologies buffer
   * into the reference's first-event-aligned punctuation windows (W1-W3)
-  * and process each flushed window as an independent community. Window
-  * membership is materialized by the [[PunctuationWindow]] fold; the
-  * per-window community operators then run as ONE shuffle-parallel plan
-  * over all windows (ids carry a "<windowStartMicros>:" prefix, making
-  * every key window-scoped), where the Storm bolts looped one window at
-  * a time on one thread.
-  */
+  * and process each flushed window as an independent community. Each is
+  * ONE per-window body (`roles`, `interactions`) over `(win, <the
+  * normalized tweet columns>)`, where `win` is the window start in
+  * micros as a string. The body prefixes every id with "<win>:", making
+  * every key window-scoped, so the community operators run as one
+  * shuffle-parallel plan over all windows where the Storm bolts looped
+  * one window at a time on one thread; the output splits the prefix
+  * back out into `window_start`.
+  *
+  * Two window shells feed the bodies the same frame; only how a
+  * window's tweets come back after the [[PunctuationWindow]] fold
+  * differs:
+  *  - batch (`batchWindows`): the fold carries tweet ids, and the
+  *    flushed ids join back to the normalized tweets;
+  *  - stream (`streamWindows`): the fold's state is checkpointed
+  *    across micro-batches (W6), so a window's tweets may have arrived
+  *    in earlier micro-batches that no join can reach. The fold
+  *    therefore carries each tweet whole, as JSON (the reference's own
+  *    hand-off: the window bolt emits a flushed window's tweets as JSON,
+  *    DiscussionTreeBolt.java:152-161, and the role bolt re-parses them,
+  *    RoleAnalysisBolt.java:81-84), and `from_json` restores the columns
+  *    after the fold.
+  *
+  * Every stream form writes through one `sink`: a `foreachBatch` that
+  * skips empty micro-batches and overwrites `outDir/batch=<id>`, so a
+  * micro-batch replayed after a restart rewrites its own directory. */
 object Topologies {
 
-  /** Tag each tweet of a flushed window with its window start; tweets of
-    * the trailing unflushed buffer are excluded, exactly like the
-    * reference (it never emits a partial buffer). `keyCol` is the
-    * channel key (the bolt had a single global buffer — use a constant
-    * for strict parity; any key column gives the parallel upgrade). */
-  def windowTags(normalized: DataFrame, windowMicros: Long,
-      keyCol: Option[String] = None): DataFrame = {
-    val keyed = keyCol match {
-      case Some(k) => normalized.withColumn("_wkey", col(k))
-      case None => normalized.withColumn("_wkey", lit("all"))
-    }
-    val ev = PunctuationWindow.fromColumns(keyed, "_wkey", "ts", "tweet_id")
-    PunctuationWindow.toDataFrame(PunctuationWindow.batch(ev, windowMicros))
-      .select(col("window_start"), explode(col("payloads")).as("tweet_id"))
-  }
+  /** Prefixes an id with its window: "<win>:<id>" (null stays null). */
+  private def scoped(id: Column): Column = concat(col("win"), lit(":"), id)
 
-  private def prefixed(c: org.apache.spark.sql.Column, win: org.apache.spark.sql.Column) =
-    when(c.isNotNull, concat(win, lit(":"), c))
+  /** `window_start` and the unprefixed `id` from a window-scoped `id`. */
+  private def unscoped(id: String): Seq[Column] = Seq(
+    timestamp_micros(substring_index(col(id), ":", 1).cast("long")).as("window_start"),
+    substring_index(col(id), ":", -1).as(id))
 
-  /** roleAnalysisTopology: tweets → F1 → normalize → W1 windows → per-
-    * window discussion trees (J4) → A3/A4/A5/A6 community roles.
-    * Output: (window_start, user_id, role, postCount, ...). */
-  def roleAnalysis(tweets: DataFrame, windowMicros: Long = 600000000L): DataFrame = {
-    val norm = TweetSource.normalized(tweets)
-    val tagged = norm.join(windowTags(norm, windowMicros), "tweet_id")
-    val win = unix_micros(col("window_start")).cast("string")
-    val scoped = tagged.select(
-      prefixed(col("tweet_id"), win).as("tweet_id"),
-      prefixed(col("author_id"), win).as("author_id"),
+  /** Role-analysis per-window body: window-scoped discussion trees (J4)
+    * → A3/A4/A5/A6 community roles. `withRoots` and `userFeatures` run
+    * their eager checkpoint jobs here, when the body is built. */
+  private def roles(windowed: DataFrame): DataFrame = {
+    val tweets = windowed.select(
+      scoped(col("tweet_id")).as("tweet_id"),
+      scoped(col("author_id")).as("author_id"),
       col("author_screen_name"), col("ts"), col("retweet"),
-      prefixed(col("ancestor_id"), win).as("ancestor_id"),
-      prefixed(col("in_reply_to_user_id_str"), win).as("in_reply_to_user_id_str"),
+      scoped(col("ancestor_id")).as("ancestor_id"),
+      scoped(col("in_reply_to_user_id_str")).as("in_reply_to_user_id_str"),
       col("in_reply_to_screen_name"))
-    val rooted = DiscussionTree.withRoots(DiscussionTree.nodes(scoped))
+    val rooted = DiscussionTree.withRoots(DiscussionTree.nodes(tweets))
     RoleAnalysis.rolesWindowed(
       rooted.select("node_id", "user_id", "parent_id", "root_id"))
-      .select(
-        timestamp_micros(substring_index(col("user_id"), ":", 1).cast("long"))
-          .as("window_start"),
-        substring_index(col("user_id"), ":", -1).as("user_id"),
+      .select(unscoped("user_id") ++ Seq(
         col("role"), col("postCount"), col("repliedPosts"),
         col("replyingUserCount"), col("inDegreeRatio"),
         col("postsReplyRatio"), col("bidirNeighbourRatio"),
         col("bidirThreadRatio"), col("avgPostPerThread"),
-        col("stddevPostsPerThread"))
+        col("stddevPostsPerThread")): _*)
   }
 
-  /** roleAnalysisTopology, streaming form — the reference's actual bolt
-    * wiring: the window stage emits each flushed window's tweets as JSON
-    * (T7, DiscussionTreeBolt.java:152-161), the role stage re-parses
-    * them (T8, RoleAnalysisBolt.java:81-84). Here the punctuation-window
-    * fold runs in flatMapGroupsWithState (checkpointed state across
-    * micro-batches, W6) and each foreachBatch runs the per-window
-    * community pipeline on the flushed windows, writing parquet to
-    * `outDir/batch=<id>` (idempotent under micro-batch replay) and
-    * dropping the batch's cached intermediates. Caller starts the
-    * returned query. */
-  def roleAnalysisStream(tweets: DataFrame, windowMicros: Long,
-      outDir: String, checkpoint: String) = {
+  /** Interaction-graph per-window body: the author id is window-scoped
+    * through the (author, action) aggregation and split back out. */
+  private def interactions(windowed: DataFrame): DataFrame =
+    InteractionGraph.flatCounts(InteractionGraph.interactions(
+      windowed.withColumn("author_id", scoped(col("author_id")))))
+      .select(unscoped("author_id") ++ Seq(
+        col("action"), col("screen_name"), col("n_interactions"),
+        col("n_targets"), col("first_ts"), col("last_ts")): _*)
+
+  /** Fold input: every tweet under the one channel key (the bolt had a
+    * single global buffer), timed by `ts`, carrying `payload`. */
+  private def foldEvents(norm: DataFrame, payload: Column) =
+    PunctuationWindow.fromColumns(
+      norm.withColumn("_wkey", lit("all")).withColumn("_payload", payload),
+      "_wkey", "ts", "_payload")
+
+  /** Batch window shell: the tweets of each flushed window as `(win,
+    * <normalized tweet columns>)`. Tweets of the trailing unflushed
+    * buffer are excluded, exactly like the reference (it never emits a
+    * partial buffer). */
+  private def batchWindows(tweets: DataFrame, windowMicros: Long): DataFrame = {
     val norm = TweetSource.normalized(tweets)
-    val normSchema = norm.schema
-    val withPayload = norm
-      .withColumn("_wkey", lit("all"))
-      .withColumn("_payload",
-        to_json(struct(normSchema.fieldNames.map(col).toIndexedSeq: _*)))
-    val ev = PunctuationWindow.fromColumns(withPayload, "_wkey", "ts", "_payload")
-    PunctuationWindow.streaming(ev, windowMicros).toDF()
-      .writeStream
+    // the window start crosses the join as a long and becomes `win`
+    // after it: carried as a string through the join, the role-analysis
+    // batch pass over streambench's input ran one more job and stage
+    val members = PunctuationWindow.batch(foldEvents(norm, col("tweet_id")), windowMicros)
+      .select(col("startMicros"), explode(col("payloads")).as("tweet_id"))
+    norm.join(members, "tweet_id").select(
+      col("startMicros").cast("string").as("win") +: norm.columns.map(col).toSeq: _*)
+  }
+
+  /** Stream window shell: the fold runs in flatMapGroupsWithState with
+    * checkpointed state, and each non-empty micro-batch of flushed
+    * windows goes through `body` as `(win, <normalized tweet columns>)`
+    * into `sink`. */
+  private def streamWindows(tweets: DataFrame, windowMicros: Long,
+      outDir: String, checkpoint: String)(body: DataFrame => DataFrame) = {
+    val norm = TweetSource.normalized(tweets)
+    val json = to_json(struct(norm.columns.map(col).toIndexedSeq: _*))
+    sink(PunctuationWindow.streaming(foldEvents(norm, json), windowMicros).toDF(),
+        outDir, checkpoint) { flushed =>
+      body(flushed
+        .select(col("startMicros"), explode(col("payloads")).as("json"))
+        .select(col("startMicros").cast("string").as("win"),
+          from_json(col("json"), norm.schema).as("t"))
+        .select(col("win"), col("t.*")))
+    }
+  }
+
+  /** The stream sink shell: each non-empty micro-batch goes through
+    * `perBatch` and overwrites `outDir/batch=<id>`. foreachBatch is
+    * at-least-once, so the write is addressed by batch id: replaying a
+    * micro-batch after a restart rewrites its own directory instead of
+    * appending duplicate rows. No cache cleanup is needed: every operator
+    * on these paths bounds its own cache lifecycle, and a session-wide
+    * clearCache() would evict caches belonging to OTHER workloads sharing
+    * the session (sharedState is shared even across newSession()).
+    * Caller starts the returned query. */
+  private def sink(stream: DataFrame, outDir: String, checkpoint: String)(
+      perBatch: DataFrame => DataFrame) =
+    stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val tagged = batch
-            .select(col("startMicros"), explode(col("payloads")).as("json"))
-            .select(col("startMicros").cast("string").as("win"),
-              from_json(col("json"), normSchema).as("t"))
-            .select(col("win"), col("t.*"))
-          val scoped = tagged.select(
-            prefixed(col("tweet_id"), col("win")).as("tweet_id"),
-            prefixed(col("author_id"), col("win")).as("author_id"),
-            col("author_screen_name"), col("ts"), col("retweet"),
-            prefixed(col("ancestor_id"), col("win")).as("ancestor_id"),
-            prefixed(col("in_reply_to_user_id_str"), col("win"))
-              .as("in_reply_to_user_id_str"),
-            col("in_reply_to_screen_name"))
-          val rooted = DiscussionTree.withRoots(DiscussionTree.nodes(scoped))
-          RoleAnalysis.rolesWindowed(
-            rooted.select("node_id", "user_id", "parent_id", "root_id"))
-            .select(
-              timestamp_micros(substring_index(col("user_id"), ":", 1).cast("long"))
-                .as("window_start"),
-              substring_index(col("user_id"), ":", -1).as("user_id"),
-              col("role"), col("postCount"), col("inDegreeRatio"))
-            // batch-id-addressed overwrite (same device as debugJsonSink):
-            // replaying a micro-batch after a restart rewrites its own
-            // directory instead of appending duplicate rows — foreachBatch
-            // is at-least-once, so the sink must be idempotent per batchId.
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          // No cache cleanup needed here: every operator on this path
-          // (withRoots, userFeatures) bounds its own cache lifecycle, and
-          // a session-wide clearCache() would evict caches belonging to
-          // OTHER workloads sharing the session (sharedState is shared
-          // even across newSession()). StreamingSpec asserts the
-          // CacheManager is empty after the stream stops.
-        }
+        if (!batch.isEmpty)
+          perBatch(batch).write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
-  }
+
+  /** roleAnalysisTopology: tweets → F1 → normalize → W1 windows → per-
+    * window discussion trees (J4) → A3/A4/A5/A6 community roles.
+    * Output: (window_start, user_id, role, postCount, ...). */
+  def roleAnalysis(tweets: DataFrame, windowMicros: Long = 600000000L): DataFrame =
+    roles(batchWindows(tweets, windowMicros))
+
+  /** roleAnalysisTopology, streaming form — the reference's actual bolt
+    * wiring. Its parquet sink keeps five of [[roleAnalysis]]'s columns:
+    * (window_start, user_id, role, postCount, inDegreeRatio). */
+  def roleAnalysisStream(tweets: DataFrame, windowMicros: Long,
+      outDir: String, checkpoint: String) =
+    streamWindows(tweets, windowMicros, outDir, checkpoint)(roles(_)
+      .select("window_start", "user_id", "role", "postCount", "inDegreeRatio"))
 
   /** InteractionGraphBolt (implemented but never wired in the reference —
     * rebuilt as a first-class query): tweets → F1 → normalize → W1
-    * windows → per-window (author, action) interaction summary. The
-    * author id is window-prefixed through the aggregation (same
-    * window-scoping device as [[roleAnalysis]]) and split back out. */
-  def interactionGraph(tweets: DataFrame, windowMicros: Long = 600000000L): DataFrame = {
-    val norm = TweetSource.normalized(tweets)
-    val tagged = norm.join(windowTags(norm, windowMicros), "tweet_id")
-    val win = unix_micros(col("window_start")).cast("string")
-    val scoped = tagged.withColumn("author_id",
-      concat(win, lit(":"), col("author_id")))
-    InteractionGraph.flatCounts(InteractionGraph.interactions(scoped))
-      .select(
-        timestamp_micros(substring_index(col("author_id"), ":", 1).cast("long"))
-          .as("window_start"),
-        substring_index(col("author_id"), ":", -1).as("author_id"),
-        col("action"), col("screen_name"), col("n_interactions"),
-        col("n_targets"), col("first_ts"), col("last_ts"))
-  }
+    * windows → per-window (author, action) interaction summary. */
+  def interactionGraph(tweets: DataFrame, windowMicros: Long = 600000000L): DataFrame =
+    interactions(batchWindows(tweets, windowMicros))
 
-  /** interactionGraph, streaming form — the same wiring as
-    * [[roleAnalysisStream]] (punctuation-window fold in
-    * flatMapGroupsWithState with checkpointed state, JSON hand-off
-    * between stages, batch-id-addressed idempotent parquet sink,
-    * operator-bounded cache lifecycles); the per-window stage is the interaction-graph
-    * aggregate instead of the community-role pipeline. Caller starts the
-    * returned query. */
+  /** interactionGraph, streaming form; its parquet sink has
+    * [[interactionGraph]]'s columns. */
   def interactionGraphStream(tweets: DataFrame, windowMicros: Long,
-      outDir: String, checkpoint: String) = {
-    val norm = TweetSource.normalized(tweets)
-    val normSchema = norm.schema
-    val withPayload = norm
-      .withColumn("_wkey", lit("all"))
-      .withColumn("_payload",
-        to_json(struct(normSchema.fieldNames.map(col).toIndexedSeq: _*)))
-    val ev = PunctuationWindow.fromColumns(withPayload, "_wkey", "ts", "_payload")
-    PunctuationWindow.streaming(ev, windowMicros).toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val scoped = batch
-            .select(col("startMicros"), explode(col("payloads")).as("json"))
-            .select(col("startMicros").cast("string").as("win"),
-              from_json(col("json"), normSchema).as("t"))
-            .select(col("win"), col("t.*"))
-            .withColumn("author_id", concat(col("win"), lit(":"), col("author_id")))
-          InteractionGraph.flatCounts(InteractionGraph.interactions(scoped))
-            .select(
-              timestamp_micros(substring_index(col("author_id"), ":", 1).cast("long"))
-                .as("window_start"),
-              substring_index(col("author_id"), ":", -1).as("author_id"),
-              col("action"), col("screen_name"), col("n_interactions"),
-              col("n_targets"), col("first_ts"), col("last_ts"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          // Nothing on this path caches (flatCounts is a straight
-          // aggregation); see roleAnalysisStream for why a session-wide
-          // clearCache() would be wrong here.
-        }
-      }
-  }
+      outDir: String, checkpoint: String) =
+    streamWindows(tweets, windowMicros, outDir, checkpoint)(interactions)
 
   /** locationTopicModelTopology: tweets → F1/F2 → language filter (F3) →
     * T2 stem/tokenize → T3 vocab index → M2 scoring → A9 top-K →
@@ -284,34 +256,21 @@ object Topologies {
     * reference topology): a stream of (doc_id, ts, text) documents →
     * watermark-bounded exact dedup (first arrival wins, state keyed by
     * text hash) → quality score + language ID annotations → quality
-    * filter → batch-id-addressed idempotent parquet sink. The batch
-    * pipeline ops compose unchanged inside foreachBatch — per-row
-    * projections and a bounded-state dedup, nothing that needs a
-    * window. Caller starts the returned query. */
+    * filter → `sink`. The annotations are pure per-row projections, no
+    * join: a doc_id-keyed join back would cross-pair rows when a batch
+    * carries two texts under one id, and would pay two shuffles per
+    * micro-batch for per-row work. PII redaction runs LAST, on the
+    * surviving rows only, and replaces the raw text at the sink boundary
+    * (nothing unscrubbed lands in the training store). */
   def documentIngestStream(docs: DataFrame, outDir: String,
-      checkpoint: String, watermark: String = "10 minutes") = {
-    val deduped = graft.pipeline.Dedup
-      .exactStreaming(docs, "doc_id", "text", "ts", watermark)
-    deduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // append-form annotations: pure per-row projections, no join —
-          // a doc_id-keyed join back would cross-pair rows when a batch
-          // carries two texts under one id, and would pay two shuffles
-          // per micro-batch for per-row work. PII redaction runs LAST,
-          // on the surviving rows only, and replaces the raw text at
-          // the sink boundary (the production norm: nothing unscrubbed
-          // lands in the training store).
-          graft.pipeline.Pii.withScrub(
-            TextMetrics.withLanguage(
-              TextMetrics.withQuality(batch.select("doc_id", "ts", "text"), "text"),
-              "text")
-              .filter(col("quality") > 0), "text")
-            .withColumn("text", col("redacted")).drop("redacted")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-      }
-  }
+      checkpoint: String, watermark: String = "10 minutes") =
+    sink(graft.pipeline.Dedup.exactStreaming(docs, "doc_id", "text", "ts", watermark),
+        outDir, checkpoint) { batch =>
+      graft.pipeline.Pii.withScrub(
+        TextMetrics.withLanguage(
+          TextMetrics.withQuality(batch.select("doc_id", "ts", "text"), "text"),
+          "text")
+          .filter(col("quality") > 0), "text")
+        .withColumn("text", col("redacted")).drop("redacted")
+    }
 }

@@ -49,10 +49,18 @@ class BenchDetailSchemaSpec extends AnyFunSuite {
       "c" -> 1.0, // -3.0 s and -75%: in, largest delta first
       "d" -> 0.5, // +0.4 s and +400%: in
       "e" -> 9.9) // no previous reading — excluded
-    val lines = Bench.topMovers(prev, now)
+    val lines = Bench.topMovers(prev, now, failed = Set.empty)
     assert(lines == Seq(
       "[bench] mover c: 4.00 -> 1.00 s",
       "[bench] mover d: 0.10 -> 0.50 s"))
-    assert(Bench.topMovers(prev, now, cap = 1).size == 1)
+    assert(Bench.topMovers(prev, now, failed = Set.empty, cap = 1).size == 1)
+  }
+
+  test("topMovers: a crashed query is never reported as a mover") {
+    // every run of "a" crashed, so its near-zero time is no reading
+    val prev = Map("a" -> 5.0, "b" -> 1.0)
+    val now = Map("a" -> 0.001, "b" -> 2.0)
+    assert(Bench.topMovers(prev, now, failed = Set("a")) ==
+      Seq("[bench] mover b: 1.00 -> 2.00 s"))
   }
 }

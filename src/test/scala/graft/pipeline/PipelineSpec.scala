@@ -1429,6 +1429,49 @@ class PipelineSpec extends AnyFunSuite {
       "multi-pass candidates are a superset: pass 1 pairs all survive")
   }
 
+  test("sortedNeighborhood: null and empty keys rank like a nulls-first row_number in both SNM forms") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // null texts have a null canonical key; "" and "!!!" canonicalize to
+    // the empty key, which shares the null key's 8-char prefix (0)
+    val docsDf = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "alpha beta gamma"), (4L, null),
+      (5L, "!!!"), (6L, "Alpha  BETA"), (7L, "beta gamma"), (8L, "zulu"),
+      (9L, "alpha"), (10L, null), (11L, "mike november"))
+      .toDF("doc_id", "text").repartition(3)
+    // shingle sets {"s", id}: every pair verifies at Jaccard exactly 1/3,
+    // so the output pairs are the candidate pairs, and a candidate pair
+    // emitted twice would verify at 2/2 = 1 instead
+    val shingled = docsDf.select(col("doc_id"),
+      array(lit("s"), col("doc_id").cast("string")).as("shingles"))
+    val window = 2
+    def want(keys: Seq[org.apache.spark.sql.Column]): Set[(Long, Long)] = {
+      val ranked = keys.zipWithIndex.map { case (k, p) =>
+          docsDf.select(col("doc_id"), k.as("_key"), lit(p).as("_pass")) }
+        .reduce(_ unionByName _)
+        .select(col("_pass"), col("doc_id"), row_number().over(
+          Window.partitionBy("_pass")
+            .orderBy(col("_key").asc_nulls_first, col("doc_id"))).as("rn"))
+        .collect().map(r => (r.getInt(0), r.getInt(2)) -> r.getLong(1)).toMap
+      ranked.toSeq.flatMap { case ((p, rn), a) =>
+        (1 to window).flatMap(d => ranked.get((p, rn + d)).map(b => (a.min(b), a.max(b))))
+      }.toSet
+    }
+    def got(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val rows = df.collect()
+      val pairs = rows.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
+      assert(pairs.distinct.length == pairs.length, "duplicate pair rows")
+      assert(rows.forall(_.getAs[Double]("jaccard") == 1.0 / 3.0),
+        "a candidate pair was emitted more than once")
+      pairs.toSet
+    }
+    val canon = Dedup.canonicalText(col("text"))
+    assert(got(Dedup.sortedNeighborhood(docsDf, "doc_id", "text", window,
+      threshold = 0.0, shingled = Some(shingled))) == want(Seq(canon)))
+    assert(got(Dedup.sortedNeighborhoodMultiPass(docsDf, "doc_id", "text", window,
+      threshold = 0.0, shingled = Some(shingled))) == want(Seq(canon, reverse(canon))))
+  }
+
   test("jaccardAcross: distinct-pairs precondition — duplicate input pairs collapse with inflated shared (contract pin)") {
     import spark.implicits._
     // ADVICE r19: the single-consumption shape REQUIRES distinct pair

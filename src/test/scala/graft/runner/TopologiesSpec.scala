@@ -1,6 +1,13 @@
 package graft.runner
 
+import java.nio.file.Files
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -29,18 +36,90 @@ class TopologiesSpec extends AnyFunSuite {
   /** Two flushed 10-min windows + a trailing (never-emitted) buffer.
     * w1 = {t1,t2,t3,t4} (t4 is the closing event, included);
     * w2 = {t5,t6,t7} with t6 replying to an unobserved parent. */
-  private lazy val tweets = {
-    val lines = Seq(
-      tweet("t1", "u1", "00:00:00"),
-      tweet("t2", "u2", "00:01:00", replyTo = "t1", replyUser = "u1"),
-      tweet("t3", "u1", "00:02:00", replyTo = "t2", replyUser = "u2"),
-      tweet("t4", "u3", "00:10:30"), // closes w1, joins w1
-      tweet("t5", "u1", "00:12:00"),
-      tweet("t6", "u2", "00:13:00", replyTo = "gone", replyUser = "u9"),
-      tweet("t7", "u3", "00:25:00"), // closes w2, joins w2
-      tweet("t8", "u1", "00:30:00")) // trailing buffer, never flushed
+  private val lines = Seq(
+    tweet("t1", "u1", "00:00:00"),
+    tweet("t2", "u2", "00:01:00", replyTo = "t1", replyUser = "u1"),
+    tweet("t3", "u1", "00:02:00", replyTo = "t2", replyUser = "u2"),
+    tweet("t4", "u3", "00:10:30"), // closes w1, joins w1
+    tweet("t5", "u1", "00:12:00"),
+    tweet("t6", "u2", "00:13:00", replyTo = "gone", replyUser = "u9"),
+    tweet("t7", "u3", "00:25:00"), // closes w2, joins w2
+    tweet("t8", "u1", "00:30:00")) // trailing buffer, never flushed
+
+  private lazy val tweets =
     spark.read.schema(TweetSource.tweetSchema).json(lines.toDS())
+
+  /** Counts started Spark jobs per (streaming query id, micro-batch id),
+    * from the local properties the micro-batch engine sets on each job. */
+  private class JobsPerBatch extends SparkListener {
+    private val counts = scala.collection.mutable.Map.empty[(String, Long), Int]
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        (Option(p.getProperty("sql.streaming.queryId")),
+          Option(p.getProperty("streaming.sql.batchId"))) match {
+          case (Some(q), Some(b)) => synchronized {
+            counts((q, b.toLong)) = counts.getOrElse((q, b.toLong), 0) + 1
+          }
+          case _ => ()
+        }
+      }
+    def of(queryId: String): Map[Long, Int] = synchronized {
+      counts.collect { case ((q, b), n) if q == queryId => b -> n }.toMap
+    }
   }
+
+  /** One run of a tweet stream over the fixture: its sink and checkpoint
+    * directories, its source (a restart must read the same one), and the
+    * Spark jobs each micro-batch launched. */
+  private case class FixtureRun(outDir: String, ckptDir: String,
+      source: DataFrame, jobs: Map[Long, Int])
+
+  /** Starts the stream `start` builds over a fresh MemoryStream and feeds
+    * it the fixture three lines per micro-batch (three batches; window
+    * state must survive across them, W6). */
+  private def runFixture(name: String,
+      start: (DataFrame, String, String) => DataStreamWriter[Row]): FixtureRun = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[String]
+    val source = stream.toDS()
+      .select(from_json(col("value"), TweetSource.tweetSchema).as("m"))
+      .select("m.*")
+    val outDir = Files.createTempDirectory(s"${name}_out").toString
+    val ckptDir = Files.createTempDirectory(s"${name}_ckpt").toString
+    val sc = spark.sparkContext
+    val jobs = new JobsPerBatch
+    sc.addSparkListener(jobs)
+    val query = start(source, outDir, ckptDir).start()
+    try lines.grouped(3).foreach { chunk =>
+      stream.addData(chunk)
+      query.processAllAvailable()
+    } finally {
+      query.stop()
+      ListenerBus.drain(sc)
+      sc.removeSparkListener(jobs)
+    }
+    FixtureRun(outDir, ckptDir, source, jobs.of(query.id.toString))
+  }
+
+  /** Idempotency under replay: deletes the last commit marker so a restart
+    * re-runs the final micro-batch (foreachBatch is at-least-once), then
+    * restarts. The batch-id-addressed overwrite must leave the output
+    * unchanged; an append sink would duplicate the replayed batch's rows. */
+  private def replayLastBatch(ckptDir: String)(restart: => StreamingQuery): Unit = {
+    val commits = new java.io.File(s"$ckptDir/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    assert(commits.nonEmpty)
+    val crc = new java.io.File(commits.last.getParent, s".${commits.last.getName}.crc")
+    assert(commits.last.delete())
+    if (crc.exists()) crc.delete() // Hadoop local-FS checksum shadow file
+    val replay = restart
+    try replay.processAllAvailable() finally replay.stop()
+  }
+
+  /** A parquet sink's column names and types, without the `batch`
+    * partition column the batch-id-addressed directories add. */
+  private def sinkSchema(outDir: String) =
+    spark.read.parquet(outDir).drop("batch").schema.map(f => f.name -> f.dataType)
 
   test("roleAnalysis: per-window communities, trailing buffer excluded") {
     // collect once instead of cache(): a cached frame left registered here
@@ -79,39 +158,22 @@ class TopologiesSpec extends AnyFunSuite {
   }
 
   test("interactionGraphStream matches the batch topology across micro-batches") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lines = Seq(
-      tweet("t1", "u1", "00:00:00"),
-      tweet("t2", "u2", "00:01:00", replyTo = "t1", replyUser = "u1"),
-      tweet("t3", "u1", "00:02:00", replyTo = "t2", replyUser = "u2"),
-      tweet("t4", "u3", "00:10:30"),
-      tweet("t5", "u1", "00:12:00"),
-      tweet("t6", "u2", "00:13:00", replyTo = "gone", replyUser = "u9"),
-      tweet("t7", "u3", "00:25:00"),
-      tweet("t8", "u1", "00:30:00"))
-    val stream = MemoryStream[String]
-    val streamTweets = stream.toDS()
-      .select(from_json(col("value"), TweetSource.tweetSchema).as("m"))
-      .select("m.*")
-    val outDir = Files.createTempDirectory("ig_out").toString
-    val query = Topologies.interactionGraphStream(streamTweets, 600000000L,
-      outDir, Files.createTempDirectory("ig_ckpt").toString).start()
-    try {
-      lines.grouped(3).foreach { chunk =>
-        stream.addData(chunk)
-        query.processAllAvailable()
-      }
-    } finally query.stop()
-    def canon(df: org.apache.spark.sql.DataFrame) = df
+    val run = runFixture("ig", Topologies.interactionGraphStream(_, 600000000L, _, _))
+    def canon(df: DataFrame) = df
       .select("window_start", "author_id", "action", "screen_name",
         "n_interactions", "n_targets", "first_ts", "last_ts")
       .collect().map(_.toString).sorted.toSeq
-    val streamed = canon(spark.read.parquet(outDir))
-    val batch = canon(Topologies.interactionGraph(tweets))
-    assert(streamed == batch)
+    val streamed = canon(spark.read.parquet(run.outDir))
+    val batch = Topologies.interactionGraph(tweets)
+    assert(streamed == canon(batch))
     assert(streamed.nonEmpty)
+    // the stream's sink carries the batch topology's columns, in order
+    assert(sinkSchema(run.outDir) == batch.schema.map(f => f.name -> f.dataType))
+
+    replayLastBatch(run.ckptDir)(Topologies.interactionGraphStream(run.source,
+      600000000L, run.outDir, run.ckptDir).start())
+    assert(canon(spark.read.parquet(run.outDir)) == streamed,
+      "micro-batch replay duplicated rows")
   }
 
   test("locationTopicModel: english-filtered, indexed, top-k located") {
@@ -130,8 +192,6 @@ class TopologiesSpec extends AnyFunSuite {
   }
 
   test("documentIngestStream: dedup + quality filter + langid with idempotent batches") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(s: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
     val good = "the table is fast and the query is small and the data is good"
@@ -151,8 +211,9 @@ class TopologiesSpec extends AnyFunSuite {
         (6L, ts(6), good + " pay 4539578763621486 ref 4539578763621487")))
       query.processAllAvailable()
     } finally query.stop()
-    val rows = spark.read.parquet(outDir)
+    def read() = spark.read.parquet(outDir)
       .select("doc_id", "detected_lang", "n_pii", "n_cards", "text").collect()
+    val rows = read()
     val out = rows.map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out.keySet == Set(1L, 4L, 5L, 6L)) // 2 filtered on quality, 3 deduped
     assert(out(1L) == "en")
@@ -171,27 +232,14 @@ class TopologiesSpec extends AnyFunSuite {
     assert(r6.getAs[String]("text") ==
       good + " pay <CARD> ref 4539578763621487")
     assert(rows.forall(r => !r.getAs[String]("text").contains("4539578763621486")))
+
+    replayLastBatch(ckptDir)(
+      Topologies.documentIngestStream(docs, outDir, ckptDir).start())
+    assert(read().map(_.toString).sorted.toSeq == rows.map(_.toString).sorted.toSeq,
+      "micro-batch replay duplicated rows")
   }
 
   test("roleAnalysisStream matches the batch topology across micro-batches") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lines = Seq(
-      tweet("t1", "u1", "00:00:00"),
-      tweet("t2", "u2", "00:01:00", replyTo = "t1", replyUser = "u1"),
-      tweet("t3", "u1", "00:02:00", replyTo = "t2", replyUser = "u2"),
-      tweet("t4", "u3", "00:10:30"),
-      tweet("t5", "u1", "00:12:00"),
-      tweet("t6", "u2", "00:13:00", replyTo = "gone", replyUser = "u9"),
-      tweet("t7", "u3", "00:25:00"),
-      tweet("t8", "u1", "00:30:00"))
-    val stream = MemoryStream[String]
-    val streamTweets = stream.toDS()
-      .select(from_json(col("value"), TweetSource.tweetSchema).as("m"))
-      .select("m.*")
-    val outDir = Files.createTempDirectory("roles_out").toString
-    val ckptDir = Files.createTempDirectory("roles_ckpt").toString
     // CacheManager entry count via reflection (no public listing API):
     // the session is shared across suites and other workloads may hold
     // intentional session-scoped caches (OperatorQueries adapters), so
@@ -203,52 +251,45 @@ class TopologiesSpec extends AnyFunSuite {
       fd.get(cm).asInstanceOf[Iterable[_]].size
     }
     val cachedBefore = cachedCount
-    val query = Topologies.roleAnalysisStream(streamTweets, 600000000L,
-      outDir, ckptDir).start()
-    try {
-      // three micro-batches: window state must survive across them (W6)
-      lines.grouped(3).foreach { chunk =>
-        stream.addData(chunk)
-        query.processAllAvailable()
-      }
-    } finally query.stop()
+    val run = runFixture("roles", Topologies.roleAnalysisStream(_, 600000000L, _, _))
 
     // a long-lived stream must not accumulate CacheManager entries —
     // every operator on its path bounds its own cache lifecycle
     assert(cachedCount == cachedBefore,
       "roleAnalysisStream left cached plans behind after stopping")
 
-    val streamed = spark.read.parquet(outDir)
-      .select("window_start", "user_id", "role", "postCount", "inDegreeRatio")
+    val cols = Seq("window_start", "user_id", "role", "postCount", "inDegreeRatio")
+    def canon(df: DataFrame) = df.select(cols.map(col): _*)
       .collect().map(_.toString).sorted.toSeq
+    val streamed = canon(spark.read.parquet(run.outDir))
     val batch = Topologies.roleAnalysis(tweets)
-      .select("window_start", "user_id", "role", "postCount", "inDegreeRatio")
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed == batch)
+    assert(streamed == canon(batch))
     assert(streamed.nonEmpty)
+    // the stream's five-column sink is the batch topology's schema
+    // restricted to those columns
+    assert(sinkSchema(run.outDir) ==
+      batch.schema.filter(f => cols.contains(f.name)).map(f => f.name -> f.dataType))
 
-    // Idempotency under replay: delete the last commit marker so restart
-    // re-runs the final micro-batch (foreachBatch is at-least-once). The
-    // batch-id-addressed overwrite must leave the output unchanged —
-    // an append sink would duplicate the replayed batch's rows.
-    val commits = new java.io.File(s"$ckptDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty)
-    val crc = new java.io.File(commits.last.getParent, s".${commits.last.getName}.crc")
-    assert(commits.last.delete())
-    if (crc.exists()) crc.delete() // Hadoop local-FS checksum shadow file
-    val replay = Topologies.roleAnalysisStream(streamTweets, 600000000L,
-      outDir, ckptDir).start()
-    try replay.processAllAvailable() finally replay.stop()
-    val replayed = spark.read.parquet(outDir)
-      .select("window_start", "user_id", "role", "postCount", "inDegreeRatio")
-      .collect().map(_.toString).sorted.toSeq
-    assert(replayed == streamed, "micro-batch replay duplicated rows")
+    replayLastBatch(run.ckptDir)(Topologies.roleAnalysisStream(run.source,
+      600000000L, run.outDir, run.ckptDir).start())
+    assert(canon(spark.read.parquet(run.outDir)) == streamed,
+      "micro-batch replay duplicated rows")
+  }
+
+  test("role and interaction streams launch a pinned number of Spark jobs per micro-batch") {
+    // The job count per micro-batch is deterministic for a fixed plan and
+    // input, so it pins the Spark calls each batch makes: the empty check,
+    // the eager checkpoints of withRoots and userFeatures, then the write.
+    // Batch 0 flushes no window (empty check only); batches 1 and 2 each
+    // flush one.
+    val roles = runFixture("roles_jobs", Topologies.roleAnalysisStream(_, 600000000L, _, _))
+    val interactions = runFixture("ig_jobs",
+      Topologies.interactionGraphStream(_, 600000000L, _, _))
+    assert(roles.jobs == Map(0L -> 1, 1L -> 10, 2L -> 12), "roleAnalysisStream")
+    assert(interactions.jobs == Map(0L -> 1, 1L -> 2, 2L -> 2), "interactionGraphStream")
   }
 
   test("per-message topic model streams in append mode and matches the matrix scorer") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.TopicModel
     import graft.queries.OperatorQueries
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -325,7 +366,6 @@ class TopologiesSpec extends AnyFunSuite {
     assert(perMsg.collect().map(_.toString).sorted.toSeq ==
       out.map(_.toString).sorted.toSeq)
     // ...and the same plan runs as a STREAM (stateless append mode)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(String, String)]
     val query = Topologies.lodExplorerPerMessage(
@@ -349,7 +389,6 @@ class TopologiesSpec extends AnyFunSuite {
   test("web front door streamed == batch verdicts across mid-stream " +
       "batch splits (charset → extract → url dedup → blocklist → " +
       "quality → domain cap)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
     import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8, UTF_16LE}
     import graft.streaming.WebIngestStream
@@ -575,7 +614,6 @@ class TopologiesSpec extends AnyFunSuite {
 
   test("fromWarc: the continuous gate runs end-to-end on streamed WARC " +
       "containers (record explode, 2xx filter, cross-container url dedup)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.WebIngestStream
     import java.nio.charset.StandardCharsets.UTF_8
     import spark.implicits._
