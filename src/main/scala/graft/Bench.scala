@@ -42,7 +42,8 @@ import scala.util.control.NonFatal
   * sweep position (whole-sweep cal/memcal run once and cannot see it).
   * bench_detail.json adds per-run times, calibration runs,
   * total JVM GC millis, peak RSS, and a per-query map of
-  * {cal_q_ms, rss_kb, gc_ms, cached_kb, resident cache families} so
+  * {cal_q_ms, rss_kb, gc_ms, cached_kb, resident cache families,
+  * codegen compiles} so
   * sweep-position residency AND contention effects are attributable
   * from the artifact alone.
   *
@@ -92,6 +93,18 @@ object Bench {
       memcal: Double, memCalRaw: String, gcMs: Long, rssPeakKb: Long,
       raw: String, perQuery: String, fl: String, sf: String): String =
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,"cal":$cal%.3f,"cal_runs":$calRaw,"memcal":$memcal%.3f,"memcal_runs":$memCalRaw,"gc_ms":$gcMs,"rss_peak_kb":$rssPeakKb,"all_runs":$raw,"per_query":$perQuery,"failed":$fl,"sf":"$sf"}"""
+
+  /** One query's `per_query` entry in the detail sidecar — shared by
+    * [[main]] and BenchDetailSchemaSpec, which pins its key set.
+    * `codegenCompiles` is the number of Janino compiles across the
+    * query's runs (a warm query should compile next to nothing). */
+  final case class QueryTelemetry(calQms: Double, rssKb: Long, gcMs: Long,
+      cachedKb: Long, fams: Seq[String], codegenCompiles: Long) {
+    def json: String =
+      f"""{"cal_q_ms":$calQms%.1f,"rss_kb":$rssKb,"gc_ms":$gcMs,"cached_kb":$cachedKb,""" +
+        "\"fams\":" + fams.map("\"" + _ + "\"").mkString("[", ",", "]") +
+        s""","codegen_compiles":$codegenCompiles}"""
+  }
 
   /** Per-query min-of-runs extracted from a detail-sidecar JSON text —
     * the minimal parser behind the stderr top-movers block (crashed
@@ -227,6 +240,8 @@ object Bench {
     def gcNowMs(): Long = scala.jdk.CollectionConverters.ListHasAsScala(
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans)
       .asScala.map(_.getCollectionTime.max(0L)).sum
+    def compilesNow(): Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     def cachedKb(): Long =
       try {
         val info = spark.sparkContext.getRDDStorageInfo
@@ -278,6 +293,7 @@ object Bench {
     val results = sweep.zipWithIndex.map { case ((name, fn), pos) =>
       val calQms = calQOnce() * 1000.0 // contention canary at THIS position
       val gc0 = gcNowMs()
+      val compiles0 = compilesNow()
       val timed = (1 to runs).map { i =>
         val t0 = System.nanoTime()
         val ok =
@@ -297,8 +313,8 @@ object Bench {
       val best = if (good.nonEmpty) good.min else timed.map(_._1).min
       // Telemetry snapshot BEFORE the release hook: this is the state the
       // query actually ran under (resident families + their bytes).
-      val tele = (calQms, rssNowKb(), gcNowMs() - gc0, cachedKb(),
-        residentFams(pos))
+      val tele = QueryTelemetry(calQms, rssNowKb(), gcNowMs() - gc0, cachedKb(),
+        residentFams(pos), compilesNow() - compiles0)
       // bounded cache story: drop a family's shared caches once the
       // sweep is past its computed last consumer (outside the timed runs)
       releaseAt.getOrElse(pos, Nil).foreach { case (fam, rel) =>
@@ -331,10 +347,8 @@ object Bench {
     // with WHAT resident, and what RSS/GC they saw — the three columns
     // that distinguish a cache-release bug from container memory
     // pressure).
-    val perQuery = results.map { case (k, _, _, (calQ, rss, gcD, cMb, fams)) =>
-      "\"" + k + "\":" + f"""{"cal_q_ms":$calQ%.1f,"rss_kb":$rss,"gc_ms":$gcD,"cached_kb":$cMb,""" +
-        "\"fams\":" + fams.map("\"" + _ + "\"").mkString("[", ",", "]") + "}"
-    }.mkString("{", ",", "}")
+    val perQuery = results.map { case (k, _, _, t) => "\"" + k + "\":" + t.json }
+      .mkString("{", ",", "}")
     val fl = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val sf = sfDir.split("/sf").last

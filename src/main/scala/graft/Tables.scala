@@ -111,6 +111,16 @@ object Tables {
       // unbounded (the default) costs minutes of CPU and OOMs the driver
       // on the role-analysis query. Cap it — execution is unaffected.
       .config("spark.sql.maxPlanStringLength", "8192")
+      // Compile each generated class once. A role-analysis stream
+      // micro-batch (9 jobs, 33 stages) runs ~195 distinct generated
+      // classes and the batch pass of the same topology ~155 more; Spark's
+      // default cache of 100 evicted every class before its next use, so
+      // each micro-batch compiled ~192 anew. Measured on streambench's
+      // role_stream (4 vCPU): 100 entries -> ~192 compiles per micro-batch,
+      // 200 -> ~95, 500 or 1000 -> 1-5; drain msgs/s rose ~60% at 500. Static
+      // conf: CodeGenerator sizes its cache once, at first use, so it is
+      // set on the builder (`spark.conf.set` rejects it).
+      .config("spark.sql.codegen.cache.maxEntries", "500")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")

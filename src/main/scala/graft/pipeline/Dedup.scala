@@ -147,9 +147,9 @@ object Dedup {
     // expression once per reference; here `_kn` is named once and every
     // derived column reads the named attribute.
     // A null key has a null prefix; coalescing it to 0 puts the key in
-    // its pass's first bucket (a null bucket would be ranked as if no
-    // bucket preceded it, colliding with bucket 0's ranks), where the
-    // `_kt` tie-break orders it first, nulls first like asc_nulls_first.
+    // its pass's first bucket (a null bucket would rank ahead of every
+    // pass's buckets, away from its pass's neighbours), where the `_kt`
+    // tie-break orders it first, nulls first like asc_nulls_first.
     val keyed = passes
       .select(col("doc_id"), col("_pass"), col("_key"),
         coalesce(prefix, lit(0L)).as("_kn"))

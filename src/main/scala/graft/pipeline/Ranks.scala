@@ -103,9 +103,9 @@ object Ranks {
     * `bucketCol` (optional): the name of a caller-computed INT bucket
     * column replacing the device's linear value map — required weakly
     * monotone w.r.t. `valueCol` ascending (nulls first, NaN last,
-    * encoded by the caller) with bounded cardinality, and never null:
-    * a null bucket is ranked as if no bucket preceded it, so its ranks
-    * collide with the first bucket's. Use when the value distribution defeats a
+    * encoded by the caller) with bounded cardinality. A null bucket
+    * ranks ahead of every non-null bucket, as `asc_nulls_first` orders
+    * it. Use when the value distribution defeats a
     * linear map — e.g. Zipf counts, where the linear last bucket mixes
     * counts 1..maxCount/nBuckets and so is never single-valued; see
     * [[zipfCountBuckets]]. */
@@ -120,7 +120,10 @@ object Ranks {
     val vFinite = when(v.isNotNull && !isnan(v), v)
     val coarse = bucketCol match {
       case Some(bc) =>
-        df.withColumn("_b", col(bc).cast("int"))
+        // A null bucket ranks ahead of every non-null one (asc_nulls_first):
+        // Long.MinValue sits below every int bucket id, and every internal
+        // key stays non-null.
+        df.withColumn("_b", coalesce(col(bc).cast("long"), lit(Long.MinValue)))
       case None =>
         // Lazy 1-row stats (r20, the former eager head() was a Spark job at
         // every PLAN CONSTRUCTION — Explain, tests, bench setup): lo/hi ride

@@ -80,6 +80,10 @@ object PipelineQueries {
 
   private def lexPostings(spark: SparkSession, dir: String): DataFrame = {
     CacheRegistry.touch("postings")
+    // A cold build reads termFreqs, and a filtered sweep may start the
+    // chain at any postings consumer: each one is a tf consumer too, so
+    // the tf family's release waits for the last of them.
+    CacheRegistry.touch("tf")
     sharedPostings.getOrElseUpdate((spark.sparkContext.applicationId, dir),
       TextMetrics.lexicalPostings(termFreqs(spark, dir),
           docs(spark, dir).agg(count(lit(1)).as("n_docs")), "doc_id",
@@ -199,14 +203,14 @@ object PipelineQueries {
         "q189_sorted_neighborhood", "q200_snm_multipass",
         "q214_crossmodal_keepbest"),
       () => releaseMinhashCaches()),
-    // q179 left this set in r20: it now reads the shared postings
-    // relation, which only falls back to tf on a cold build — and
-    // q127 (earlier in sweep order) always builds postings first.
+    // Every postings consumer (q127, q179) is declared here too: a cold
+    // postings build reads tf, and a SPARK_GRAFT_ONLY sweep holding q179
+    // without q127 starts that build at q179 (lexPostings touches both).
     "tf" -> CacheFamily(
       Set("q52_tfidf", "q53_surprisal", "q79_vocab_coverage",
         "q81_nb_train", "q82_bigram_surprisal", "q85_zipf",
         "q92_quality_calibration", "q127_lexical_topk",
-        "q176_logodds_terms"),
+        "q176_logodds_terms", "q179_hybrid_retrieval"),
       () => releaseTfCache()),
     "knn" -> CacheFamily(
       Set("q77_knn_graph", "q86_knn_purity", "q150_walk_centrality"),

@@ -16,7 +16,10 @@ class BenchDetailSchemaSpec extends AnyFunSuite {
     memcal = 0.7, memCalRaw = "[0.700,0.710,0.720]", gcMs = 1234L,
     rssPeakKb = 5678L,
     raw = """{"q01_a":[1.000,2.000,null],"q02_b":[0.500,0.400,0.450]}""",
-    perQuery = """{"q01_a":{"cal_q_ms":55.0,"rss_kb":1,"gc_ms":2,"cached_kb":3,"fams":["tf"]},"q02_b":{"cal_q_ms":60.0,"rss_kb":1,"gc_ms":2,"cached_kb":3,"fams":[]}}""",
+    perQuery = Seq(
+        "q01_a" -> Bench.QueryTelemetry(55.0, 1L, 2L, 3L, Seq("tf"), 40L),
+        "q02_b" -> Bench.QueryTelemetry(60.0, 1L, 2L, 3L, Nil, 0L))
+      .map { case (k, t) => "\"" + k + "\":" + t.json }.mkString("{", ",", "}"),
     fl = """["q01_a"]""", sf = "0.1")
 
   test("renderDetail emits parseable JSON with the pinned key set") {
@@ -30,7 +33,8 @@ class BenchDetailSchemaSpec extends AnyFunSuite {
     // per-query telemetry object key set is pinned too
     val pq = (parsed \ "per_query" \ "q01_a")
       .asInstanceOf[org.json4s.JObject].obj.map(_._1)
-    assert(pq == List("cal_q_ms", "rss_kb", "gc_ms", "cached_kb", "fams"))
+    assert(pq == List("cal_q_ms", "rss_kb", "gc_ms", "cached_kb", "fams",
+      "codegen_compiles"))
   }
 
   test("parseDetailBest extracts min-of-runs and skips crashed (null) runs") {

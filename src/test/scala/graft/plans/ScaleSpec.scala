@@ -483,6 +483,30 @@ class ScaleSpec extends AnyFunSuite {
         Window.orderBy(col("v").asc, col("id").asc)).cast("long"))))
   }
 
+  test("bucketedGlobalRank with a nullable bucketCol ranks null buckets first in both arms") {
+    import org.apache.spark.sql.expressions.Window
+    // floor(v / 2) is null exactly where v is: the null-value rows carry
+    // a null bucket and must rank ahead of bucket -1 (v = -2.0), as the
+    // single-task asc_nulls_first window ranks them
+    val vals: Seq[(java.lang.Double, Long)] = Seq(
+      (null, 1L), (3.5, 2L), (-2.0, 4L), (null, 5L), (0.0, 6L),
+      (9.0, 8L), (3.5, 9L), (-2.0, 10L), (null, 11L), (1.0, 12L))
+    val df = vals.toDF("v", "id").repartition(3)
+      .withColumn("_vb", floor(col("v") / 2).cast("int"))
+      .withColumn("_tp", col("id").cast("double"))
+    val want = df.withColumn("_rn", row_number().over(
+      Window.orderBy(col("v").asc_nulls_first, col("id").asc)).cast("long"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "_rn").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val plain = graft.pipeline.Ranks.bucketedGlobalRank(df, "v", "id",
+      bucketCol = Some("_vb"))
+    val proxied = graft.pipeline.Ranks.bucketedGlobalRank(df, "v", "id",
+      bucketCol = Some("_vb"), tieProxyCol = Some("_tp"), nSubBuckets = 4)
+    assert(rows(plain) == rows(want), "no-proxy arm")
+    assert(rows(proxied) == rows(want), "tie-proxy arm")
+  }
+
   test("tie-proxy bucketedGlobalRank: Zipf-tied counts stay rank-exact and the tie mass splits across sub-buckets") {
     import org.apache.spark.sql.expressions.Window
     import graft.pipeline.Ranks

@@ -69,10 +69,15 @@ class TopologiesSpec extends AnyFunSuite {
   }
 
   /** One run of a tweet stream over the fixture: its sink and checkpoint
-    * directories, its source (a restart must read the same one), and the
-    * Spark jobs each micro-batch launched. */
+    * directories, its source (a restart must read the same one), the
+    * Spark jobs each micro-batch launched, and the generated classes each
+    * micro-batch compiled. */
   private case class FixtureRun(outDir: String, ckptDir: String,
-      source: DataFrame, jobs: Map[Long, Int])
+      source: DataFrame, jobs: Map[Long, Int], compiles: Seq[Long])
+
+  /** Janino compiles in this JVM so far (Spark codegen). */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Starts the stream `start` builds over a fresh MemoryStream and feeds
     * it the fixture three lines per micro-batch (three batches; window
@@ -90,15 +95,17 @@ class TopologiesSpec extends AnyFunSuite {
     val jobs = new JobsPerBatch
     sc.addSparkListener(jobs)
     val query = start(source, outDir, ckptDir).start()
-    try lines.grouped(3).foreach { chunk =>
+    val compiled = try lines.grouped(3).map { chunk =>
+      val c0 = compiles
       stream.addData(chunk)
       query.processAllAvailable()
-    } finally {
+      compiles - c0
+    }.toVector finally {
       query.stop()
       ListenerBus.drain(sc)
       sc.removeSparkListener(jobs)
     }
-    FixtureRun(outDir, ckptDir, source, jobs.of(query.id.toString))
+    FixtureRun(outDir, ckptDir, source, jobs.of(query.id.toString), compiled)
   }
 
   /** Idempotency under replay: deletes the last commit marker so a restart
@@ -287,6 +294,26 @@ class TopologiesSpec extends AnyFunSuite {
       Topologies.interactionGraphStream(_, 600000000L, _, _))
     assert(roles.jobs == Map(0L -> 1, 1L -> 10, 2L -> 12), "roleAnalysisStream")
     assert(interactions.jobs == Map(0L -> 1, 1L -> 2, 2L -> 2), "interactionGraphStream")
+  }
+
+  test("the role topology compiles each generated class once per session") {
+    // A role micro-batch needs more distinct generated classes (~180) than
+    // Spark's default codegen cache holds (100), which then evicted every
+    // class before its next use: each repeat run or micro-batch compiled
+    // them all again. A repeat still compiles a few dozen: adaptive
+    // execution assigns whole-stage codegen stage ids as it re-plans, the
+    // ids are part of the generated source, and they vary between runs.
+    val batch = () => Topologies.roleAnalysis(tweets).collect()
+    batch()
+    val c0 = compiles
+    batch()
+    val again = compiles - c0
+    assert(again <= 60, s"a repeat batch run compiled $again classes")
+    val stream = runFixture("roles_cg", Topologies.roleAnalysisStream(_, 600000000L, _, _))
+    // micro-batch 2 flushes a window through the same body micro-batch 1 ran
+    assert(stream.compiles(2) <= 90, s"micro-batches compiled ${stream.compiles}")
+    // same Spark calls per micro-batch as the pinned count
+    assert(stream.jobs == Map(0L -> 1, 1L -> 10, 2L -> 12))
   }
 
   test("per-message topic model streams in append mode and matches the matrix scorer") {
