@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.Fixpoint
+
 /** Discussion-tree construction (A1/J4): the Spark-native re-expression of
   * the reference's windowed reply/retweet tree builder
   * (roleAnalysisTopology/.../bolts/DiscussionTreeBolt.java:107-174).
@@ -61,62 +63,43 @@ object DiscussionTree {
     * not the loop, and a long-lived session accumulates no cache entries
     * per call.
     *
-    * Each frontier is `localCheckpoint`-ed (materialized + lineage
-    * truncated), NOT merely cached: every doubling step references the
-    * previous frontier twice, so the *logical plan tree* grows as 2^i —
-    * with plain caching, Catalyst analysis and the eager plan-string
-    * rendering on every downstream query go exponential (measured: >100 s
-    * of pure planning on the role query at sf0.1; caching doesn't help
-    * because cache substitution happens only after the full tree is
-    * analyzed). Truncating lineage at each materialized step is the
-    * standard discipline for iterative Spark computations (GraphX
-    * checkpoints for the same reason). A parent-pointer cycle (malformed
-    * data) can never converge: pointers keep moving, so the loop exits at
-    * `maxIters` and THROWS rather than silently emitting wrong roots.
+    * Each frontier is checkpointed (materialized + lineage truncated)
+    * by the [[graft.plans.Fixpoint]] driver, NOT merely cached: every
+    * doubling step references the previous frontier twice, so the
+    * *logical plan tree* grows as 2^i — with plain caching, Catalyst
+    * analysis and the eager plan-string rendering on every downstream
+    * query go exponential (measured: >100 s of pure planning on the role
+    * query at sf0.1; caching doesn't help because cache substitution
+    * happens only after the full tree is analyzed; GraphX checkpoints
+    * for the same reason). The same self-join doubles the frontier's size
+    * estimate's bit length per round; the driver's checkpoint clamps it,
+    * and so does the final one, so downstream plans see an estimate
+    * that fits in a Long. A parent-pointer cycle (malformed data) can
+    * never converge: pointers keep moving, so the loop THROWS at
+    * `maxIters` rather than silently emitting wrong roots.
     *
-    * Convergence detection rides the checkpoint job itself: a per-round
-    * accumulator counts rows whose pointer still moved (`b_dist > 0`)
-    * WHILE the frontier materializes, so each round is exactly ONE job —
-    * a separate `agg(...).first()` probe would re-scan the frontier and
-    * double the job count (2·log(depth) extra full passes at scale).
-    * Accumulator updates inside the materialization action are applied
-    * exactly once per successful task, and the job only completes when
-    * every task has, so a zero reading really means no pointer moved. */
+    * A round ticks every row whose pointer still moved (`b_dist > 0`)
+    * while the frontier materializes, so each round is exactly ONE job. */
   def withRoots(nodeDfIn: DataFrame, maxIters: Int = 20): DataFrame = {
     val nodeDf = nodeDfIn.cache()
-    try withRootsLoop(nodeDf, maxIters).localCheckpoint(true)
+    try Fixpoint.checkpoint(withRootsLoop(nodeDf, maxIters))
     finally nodeDf.unpersist(false)
   }
 
   private def withRootsLoop(nodeDf: DataFrame, maxIters: Int): DataFrame = {
-    val sc = nodeDf.sparkSession.sparkContext
-    var cur = nodeDf.select(
+    val seed = Fixpoint.checkpoint(nodeDf.select(
       col("node_id"),
       coalesce(col("parent_id"), col("node_id")).as("anc"),
-      when(col("parent_id").isNull, 0L).otherwise(1L).as("dist"))
-      .localCheckpoint() // eager: materializes and truncates lineage
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val moved = sc.longAccumulator(s"withRootsMoved$i")
-      val tick = udf((m: Boolean) => { if (m) moved.add(1L); m })
+      when(col("parent_id").isNull, 0L).otherwise(1L).as("dist")))
+    val roots = Fixpoint.iterate("withRoots", seed, maxIters) { (cur, tick) =>
       val b = cur.select(col("node_id").as("b_id"), col("anc").as("b_anc"),
         col("dist").as("b_dist"))
-      val nxt = cur.join(b, cur("anc") === b("b_id"))
+      cur.join(b, cur("anc") === b("b_id"))
+        .filter(tick(col("b_dist") > 0))
         .select(col("node_id"), col("b_anc").as("anc"),
-          (col("dist") + col("b_dist")).as("dist"),
-          tick(col("b_dist") > 0).as("chg"))
-        .localCheckpoint() // the one job per round: materialize + count movers
-        .drop("chg")
-      converged = moved.value == 0
-      cur = nxt
-      i += 1
+          (col("dist") + col("b_dist")).as("dist"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"withRoots did not converge after $maxIters pointer-doubling rounds — " +
-          "parent pointers contain a cycle (malformed input)")
-    val resolved = cur.select(col("node_id").as("r_id"),
+    val resolved = roots.select(col("node_id").as("r_id"),
       col("anc").as("root_id"), col("dist").as("depth"))
     nodeDf.join(resolved, col("node_id") === col("r_id")).drop("r_id")
   }

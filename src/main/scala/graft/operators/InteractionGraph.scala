@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.Fixpoint
 
 /** Interaction-graph construction (A2): re-expression of
   * roleAnalysisTopology/.../bolts/InteractionGraphBolt.java:96-196.
@@ -141,55 +143,19 @@ object InteractionGraph {
     *    plus u itself re-attach to min(N).
     * Fixpoint of the composition = disjoint stars whose centers are
     * component minima (their Theorem 1) — labels read directly off the
-    * final edge relation. Convergence is detected exactly by an
-    * accumulator riding each round's materialization (the
-    * nearDupClusters tick device, r19 — before, every round paid a
-    * count() job plus, near the end, a full exceptAll set-difference
-    * job): a re-attachment tick fires whenever large-star moves an edge
+    * final edge relation. Convergence is detected exactly by the
+    * [[graft.plans.Fixpoint]] driver's tick, riding each round's
+    * materialization: it fires whenever large-star moves an edge
     * (m ≠ a) or small-star emits a within-neighborhood edge (every
     * fromN row is new). Zero ticks ⟺ next ≡ edges exactly — each
     * phase re-emits every edge from one endpoint's view, and any
     * re-attachment strictly decreases the multiset sum of
     * smaller-endpoint ranks, so a changed round can never reproduce
-    * the input set. Over-ticking under task retry is safe (the test is
-    * == 0); the tick UDF is a passthrough of the emitted endpoint, so
-    * column pruning can never erase it. `maxRounds` is a loud guard
-    * only. Per-vertex output:
+    * the input set. `maxRounds` is a loud guard only. Per-vertex output:
     * (user_id, component = min id in the component). */
-  /** Convergence round count of the most recent [[connectedComponents]]
-    * call in this JVM — deterministic observability for ScaleProbeSpec
-    * (round growth, not wall-clock, is the superlinear-compounding
-    * signal). Test-only readback. */
-  val lastConvergenceRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   def connectedComponents(inter: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val sc = inter.sparkSession.sparkContext
-    var edges = undirectedEdges(inter) // (u, v), u < v, distinct, materialized
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val changed = sc.longAccumulator(s"ccStar$round")
-      // Tick via an always-true BOOLEAN filter, not a passthrough of the
-      // emitted endpoint: the old (String, Boolean) passthrough UDF made
-      // Spark CAST a numeric id column to string, silently re-typing the
-      // loop to lexicographic ordering from round 2 for any numeric-id
-      // caller (ADVICE r19; q171's ids are strings, so production never
-      // saw it — ScaleProbeSpec's numeric probe did). The filter keeps
-      // every row (returns true) and `asNondeterministic` stops the
-      // optimizer from folding, reordering or pruning it.
-      val tick = udf { (c: Boolean) =>
-        if (c) changed.add(1L); true
-      }.asNondeterministic()
-      val next = smallStar(largeStar(edges, tick), tick)
-        .localCheckpoint()
-      converged = changed.value == 0
-      edges = next
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge after $maxRounds rounds")
-    lastConvergenceRounds.set(round)
+    val edges = Fixpoint.iterate("connectedComponents", undirectedEdges(inter),
+      maxRounds)((e, tick) => smallStar(largeStar(e, tick), tick))
     // star fixpoint: every edge is (component-min, member). The min-agg
     // is an identity safety net (and one cheap shuffle on star edges).
     val children = edges.groupBy(col("v").as("user_id"))
@@ -203,18 +169,14 @@ object InteractionGraph {
     * u's closed neighborhood. Every input edge is re-emitted exactly
     * once (from its smaller endpoint's view), so connectivity is
     * preserved and the output stays normalized u < v. */
-  private def largeStar(edges: DataFrame,
-      tickThrough: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
+  private def largeStar(edges: DataFrame, tick: Column => Column): DataFrame = {
     val adj = edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
     val m = adj.groupBy(col("a")).agg(min(col("b")).as("mn"))
       .select(col("a"), least(col("mn"), col("a")).as("m"))
     adj.filter(col("b") > col("a"))
       .join(m, "a")
-      // tick iff the edge re-attached (m ≠ a); the always-true
-      // nondeterministic filter can't be pruned or folded, and m keeps
-      // its input type (no UDF cast)
-      .filter(tickThrough(col("m") =!= col("a")))
+      .filter(tick(col("m") =!= col("a"))) // tick iff the edge re-attached
       .select(col("m").as("u"), col("b").as("v")) // m <= a < b
       .distinct()
   }
@@ -222,14 +184,13 @@ object InteractionGraph {
   /** Small-star phase: the smaller neighborhood N(u) = {v < u} plus u
     * itself attach to min(N(u)). Every edge is covered from its LARGER
     * endpoint's view; output stays normalized u < v. */
-  private def smallStar(edges: DataFrame,
-      tickThrough: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
+  private def smallStar(edges: DataFrame, tick: Column => Column): DataFrame = {
     val sm = edges.select(col("v").as("a"), col("u").as("b")) // b < a
     val m = sm.groupBy(col("a")).agg(min(col("b")).as("m"))
     val fromN = sm.join(m, "a")
       .filter(col("b") =!= col("m"))
       // every fromN row is a within-neighborhood re-attachment → tick
-      .filter(tickThrough(lit(true)))
+      .filter(tick(lit(true)))
       .select(col("m").as("u"), col("b").as("v")) // m = min(N) < b
     val fromU = m.select(col("m").as("u"), col("a").as("v")) // m < a
     fromN.unionByName(fromU).distinct()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.Fixpoint
 
 /** Training-data deduplication operators (north-star extensions,
   * BASELINE.json): exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -15,9 +16,7 @@ import graft.functions.TextFunctions
   *  - MinHash/LSH shuffles only (doc_id, band_key) pairs; candidate
   *    verification joins back on the (much smaller) candidate set.
   *  - all hashing uses md5, so signatures are engine-portable; the
-  *    data path needs no UDF (whole-stage codegen throughout). The one
-  *    UDF in this file is [[nearDupClusters]]'s convergence tick — a
-  *    side-effecting accumulator probe, not a data transform.
+  *    data path needs no UDF (whole-stage codegen throughout).
   */
 object Dedup {
 
@@ -485,10 +484,9 @@ object Dedup {
     * composes resolved depth, so rounds = O(log component diameter)
     * (a plain propagation loop pays O(diameter); q207's packed
     * cross-modal graph measured 50+ rounds / 22.5 s before the jump).
-    * Every iteration localCheckpoints (the same lineage-truncation
-    * discipline as DiscussionTree.withRoots — an uncheckpointed loop's
-    * plan tree grows exponentially). Throws if `maxIters` rounds don't
-    * converge rather than emitting wrong clusters.
+    * Every round is checkpointed (an uncheckpointed loop's plan tree
+    * grows exponentially). Throws if `maxIters` rounds don't converge
+    * rather than emitting wrong clusters.
     *
     * Round-19 loop shape (before: two materialized jobs per round over
     * a corpus-cardinality label table):
@@ -508,41 +506,14 @@ object Dedup {
     *    rides the same materialization, and the step's shuffles are
     *    shared between the self-join's two sides by exchange reuse.
     *
-    * Convergence detection rides the checkpoint job (see
-    * [[graft.operators.DiscussionTree.withRoots]]): an accumulator counts
-    * label changes while the round materializes — one job per round, no
-    * separate probe join/count over the labels. Ticking only the edge
-    * step stays sound with the fused jump: if the step moved no label,
-    * the labels were already the component-min fixpoint and the jump is
-    * the identity. */
-  /** Materialize a loop round AND truncate its plan-level statistics:
-    * `localCheckpoint` alone keeps the source plan's SizeInBytes
-    * estimate (LogicalRDD.fromDataset copies stats), and the stats
-    * visitor MULTIPLIES child sizes at every join — so an iterative
-    * loop's estimate bit-length compounds per round, and with the
-    * pointer-jump's self-join it DOUBLES per round: by round ~20 the
-    * driver hangs multiplying million-bit BigIntegers inside
-    * checkpoint planning (observed live on q207 at sf0.1). Re-wrapping
-    * the checkpointed RDD through createDataFrame gives the new leaf
-    * the CONSTANT default size estimate — stats stay bounded for any
-    * round count. The Row conversion layer costs per-row CPU on a
-    * 2-long relation, nothing at any scale. */
-  private def ckptRound(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  /** Convergence round count of the most recent [[nearDupClusters]]
-    * call in this JVM — a DETERMINISTIC observability signal for the
-    * scale probes (ScaleProbeSpec asserts round growth stays ~flat
-    * under 10× data instead of relying on wall-clock ratios alone,
-    * which flake in a ±40%-noise container). Test-only readback; the
-    * operator's behavior does not depend on it. */
-  val lastConvergenceRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
+    * The loop runs on the [[graft.plans.Fixpoint]] driver, whose tick
+    * counts label changes while the round materializes — one job per
+    * round, no separate probe join/count over the labels. Ticking only
+    * the edge step stays sound with the fused jump: if the step moved
+    * no label, the labels were already the component-min fixpoint and
+    * the jump is the identity. */
   def nearDupClusters(docs: DataFrame, pairs: DataFrame, idCol: String,
       maxIters: Int = 30): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
     val docIds = docs.select(col(idCol).as("doc_id"))
     // Loop-invariant edge relation: symmetrized, restricted to endpoints
     // in the doc-id universe, hash-partitioned by dst once — every
@@ -564,68 +535,37 @@ object Dedup {
     // Labels over edge-incident vertices only (src covers both endpoint
     // roles — the edge set is symmetrized above). Singletons rejoin at
     // the end; their labels are constitutively their own ids.
-    var labels = ckptRound(edges.select(col("src").as("doc_id")).distinct()
+    val seed = Fixpoint.checkpoint(edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("label")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      // Accumulator-in-transformation is safe ONLY because the test is
-      // `== 0`: task retries/speculation can over-count ticks, never
-      // under-count, so a genuinely-converged round (no label moved
-      // anywhere) always reads exactly 0.
-      val changed = sc.longAccumulator(s"ccChanged$i")
-      val tick = udf((c: Boolean) => { if (c) changed.add(1L); c })
-      // One min-label edge step. `tick` fires only on the FIRST step of
-      // a round: if that step moved no label the labels were already
-      // the component-min fixpoint, so every later step/jump in the
-      // same plan is the identity — the convergence test stays sound.
-      // Later steps carry the first step's `chg` column through.
-      def step(l: DataFrame, first: Boolean): DataFrame = {
-        val via = edges.join(l.withColumnRenamed("doc_id", "dst"), "dst")
+    // ONE step+jump per materialized round. Measured alternatives
+    // (r19): a second jump in the same job left round counts
+    // unchanged (convergence is bounded by min-label travel along
+    // graph EDGES, not pointer depth — the packed cross-modal graph
+    // stayed at 26 rounds), and a second edge STEP per job halved
+    // long-chain round counts (26→14, 7→4) but doubled the per-round
+    // edge-join work, which made the big-union graphs (q214's five
+    // modality pair sets, 4→3 rounds only) measurably SLOWER — the
+    // e-join count is E·hops either way, and shallow graphs don't
+    // amortize the extra hop. One hop per job is the balanced point.
+    val labels = Fixpoint.iterate("nearDupClusters", seed, maxIters) { (l, tick) =>
+      // One min-label edge step...
+      val stepped = l.join(
+        edges.join(l.withColumnRenamed("doc_id", "dst"), "dst")
           .groupBy(col("src").as("doc_id"))
-          .agg(min(col("label")).as("nbr_label"))
-        val lbl = least(col("label"),
-          coalesce(col("nbr_label"), col("label"))).as("label")
-        val base = l.join(via, Seq("doc_id"), "left")
-        if (first) base.select(col("doc_id"), lbl,
-          tick(coalesce(col("nbr_label") < col("label"), lit(false))).as("chg"))
-        else base.select(col("doc_id"), lbl, col("chg"))
-      }
-      // Pointer jump (label := label[label]): resolves one level of the
-      // label TREE per application. Labels only decrease and
-      // label[x] <= x, so the jump is a pure accelerator — at the
-      // fixpoint it is the identity. Its right side prunes `chg` (the
-      // tick UDF evaluates exactly once per row, on the left spine) and
-      // the step's shuffles are shared between both copies by exchange
-      // reuse.
-      def jump(l: DataFrame, k: String): DataFrame =
-        l.join(l.select(col("doc_id").as(k), col("label").as(s"${k}v")),
-            col("label") === col(k), "left")
-          .select(col("doc_id"),
-            coalesce(col(s"${k}v"), col("label")).as("label"), col("chg"))
-      // ONE step+jump per materialized round. Measured alternatives
-      // (r19): a second jump in the same job left round counts
-      // unchanged (convergence is bounded by min-label travel along
-      // graph EDGES, not pointer depth — the packed cross-modal graph
-      // stayed at 26 rounds), and a second edge STEP per job halved
-      // long-chain round counts (26→14, 7→4) but doubled the per-round
-      // edge-join work, which made the big-union graphs (q214's five
-      // modality pair sets, 4→3 rounds only) measurably SLOWER — the
-      // e-join count is E·hops either way, and shallow graphs don't
-      // amortize the extra hop. One hop per job is the balanced point.
-      // `chg` must survive into the checkpoint (drop it only AFTER),
-      // or column pruning would erase the tick and fake instant
-      // convergence.
-      labels = ckptRound(jump(step(labels, first = true), "_j1"))
-        .drop("chg")
-      converged = changed.value == 0
-      i += 1
+          .agg(min(col("label")).as("nbr_label")),
+        Seq("doc_id"), "left")
+      val lbl = least(col("label"), coalesce(col("nbr_label"), col("label")))
+      // ...then one pointer jump (label := label[label]), resolving one
+      // level of the label TREE. Labels only decrease and label[x] <= x,
+      // so the jump is a pure accelerator — at the fixpoint it is the
+      // identity. Only the jump's left input ticks, so the step's
+      // shuffles stay shared between both sides by exchange reuse.
+      stepped.filter(tick(col("nbr_label") < col("label")))
+        .select(col("doc_id"), lbl.as("label"))
+        .join(stepped.select(col("doc_id").as("_j"), lbl.as("_jv")),
+          col("label") === col("_j"), "left")
+        .select(col("doc_id"), coalesce(col("_jv"), col("label")).as("label"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"nearDupClusters did not converge after $maxIters rounds")
-    lastConvergenceRounds.set(i)
-    System.err.println(s"[graft] nearDupClusters converged after $i rounds")
     // Reattach the singletons: docs outside the edge set keep themselves.
     docIds
       .join(labels.withColumnRenamed("label", "_lbl"), Seq("doc_id"), "left")

@@ -172,6 +172,14 @@ class InteractionGraphSpec extends AnyFunSuite {
     assert(star == minLabel.view.filterKeys(star.keySet).toMap)
   }
 
+  test("connectedComponents refuses loudly when maxRounds cannot converge a long chain") {
+    val chain = (0 until 63).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    val e = intercept[IllegalStateException] {
+      InteractionGraph.connectedComponents(inter(chain), maxRounds = 1)
+    }
+    assert(e.getMessage == "connectedComponents did not converge after 1 rounds")
+  }
+
   test("commonNeighborRecs: wedges minus edges, hub cap drops intermediates") {
     def recs(pairs: Seq[(String, String)], cap: Int = Int.MaxValue) =
       InteractionGraph.commonNeighborRecs(inter(pairs).repartition(5),

@@ -129,6 +129,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.count(_.getBoolean(2)) == 1)
   }
 
+  test("nearDupClusters refuses loudly when maxIters cannot converge a long chain") {
+    val docs = (0L until 64L).toDF("doc_id")
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.nearDupClusters(docs, pairs, "doc_id", maxIters = 1)
+    }
+    assert(e.getMessage == "nearDupClusters did not converge after 1 rounds")
+  }
+
   test("multimodal: resize emits fixed-size payloads, frame sampling fans out rows") {
     val docs = Seq((1L, "x" * 64), (2L, "y" * 100), (3L, ""))
       .toDF("doc_id", "text")

@@ -93,7 +93,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       val t = timeOf3 {
         Dedup.nearDupClusters(docs, pairs, "doc_id").count()
       }
-      (t, Dedup.lastConvergenceRounds.get())
+      (t, Fixpoint.rounds("nearDupClusters"))
     }
     run(300) // warmup (JIT, codegen caches)
     val (base, baseRounds) = run(3000)
@@ -231,7 +231,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       val t = timeOf3 {
         InteractionGraph.connectedComponents(inter).count()
       }
-      (t, InteractionGraph.lastConvergenceRounds.get())
+      (t, Fixpoint.rounds("connectedComponents"))
     }
     run(300) // warmup
     val (base, baseRounds) = run(3000)
