@@ -2,6 +2,8 @@ package graft
 
 import scala.util.control.NonFatal
 
+import graft.telemetry.Events
+
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{name:sec,...},...}.
   * Each query is forced with a noop-format write — full materialization of
@@ -43,7 +45,7 @@ import scala.util.control.NonFatal
   * bench_detail.json adds per-run times, calibration runs,
   * total JVM GC millis, peak RSS, and a per-query map of
   * {cal_q_ms, rss_kb, gc_ms, cached_kb, resident cache families,
-  * codegen compiles} so
+  * codegen compiles, operator events} so
   * sweep-position residency AND contention effects are attributable
   * from the artifact alone.
   *
@@ -97,13 +99,17 @@ object Bench {
   /** One query's `per_query` entry in the detail sidecar — shared by
     * [[main]] and BenchDetailSchemaSpec, which pins its key set.
     * `codegenCompiles` is the number of Janino compiles across the
-    * query's runs (a warm query should compile next to nothing). */
+    * query's runs (a warm query should compile next to nothing).
+    * `events` are the query's operator events, each tagged with the run
+    * that emitted it (a cache release, with the run it follows). */
   final case class QueryTelemetry(calQms: Double, rssKb: Long, gcMs: Long,
-      cachedKb: Long, fams: Seq[String], codegenCompiles: Long) {
+      cachedKb: Long, fams: Seq[String], codegenCompiles: Long,
+      events: Seq[Events.Event]) {
     def json: String =
       f"""{"cal_q_ms":$calQms%.1f,"rss_kb":$rssKb,"gc_ms":$gcMs,"cached_kb":$cachedKb,""" +
         "\"fams\":" + fams.map("\"" + _ + "\"").mkString("[", ",", "]") +
-        s""","codegen_compiles":$codegenCompiles}"""
+        s""","codegen_compiles":$codegenCompiles,"events":""" +
+        events.map(_.json).mkString("[", ",", "]") + "}"
   }
 
   /** Per-query min-of-runs extracted from a detail-sidecar JSON text —
@@ -266,7 +272,7 @@ object Bench {
     // the max sweep index over its consumers — by construction every
     // release point is >= its last consumer's position, for any query
     // set and any naming. CacheLifecycleSpec pins the declared sets to
-    // the empirical CacheRegistry touches.
+    // the empirical `cache_touch` events.
     val famSpans: Seq[(String, Int, Int, () => Unit)] =
       SparkEntry.cacheFamilies.toSeq.flatMap { case (fam, cf) =>
         cf.consumers.filterNot(SparkEntry.queries.contains).foreach { m =>
@@ -294,17 +300,19 @@ object Bench {
       val calQms = calQOnce() * 1000.0 // contention canary at THIS position
       val gc0 = gcNowMs()
       val compiles0 = compilesNow()
-      val timed = (1 to runs).map { i =>
+      val (timed, runEvents) = (1 to runs).map { i =>
         val t0 = System.nanoTime()
-        val ok =
+        val (ok, evs) = Events.scoped(name) {
           try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
           catch { case NonFatal(e) =>
             if (!failed.contains(name)) failed ::= name // any failing run marks it
             System.err.println(s"[bench] $name run $i failed: ${e.getMessage}")
             false
           }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
+        }
+        val dt = (System.nanoTime() - t0) / 1e9
+        ((dt, ok), evs.map(e => e.copy(fields = e.fields :+ ("run" -> i))))
+      }.unzip
       // A crashed run often "finishes" in near-zero time; letting it into
       // the min would report the crash duration as the query's time. Use
       // the min over SUCCESSFUL runs; only when every run failed fall back
@@ -314,14 +322,13 @@ object Bench {
       // Telemetry snapshot BEFORE the release hook: this is the state the
       // query actually ran under (resident families + their bytes).
       val tele = QueryTelemetry(calQms, rssNowKb(), gcNowMs() - gc0, cachedKb(),
-        residentFams(pos), compilesNow() - compiles0)
+        residentFams(pos), compilesNow() - compiles0, runEvents.flatten)
       // bounded cache story: drop a family's shared caches once the
       // sweep is past its computed last consumer (outside the timed runs)
-      releaseAt.getOrElse(pos, Nil).foreach { case (fam, rel) =>
+      val releases = releaseAt.getOrElse(pos, Nil).map { case (fam, rel) =>
         rel()
-        System.err.println(s"[bench] released '$fam' caches after $name " +
-          s"(computed last consumer); persistent RDDs now " +
-          s"${spark.sparkContext.getPersistentRDDs.size}")
+        Events.Event(Some(name), "cache_release", fam,
+          Seq("persistent_rdds" -> spark.sparkContext.getPersistentRDDs.size, "run" -> runs))
       }
       // Periodic driver GC OUTSIDE the timed runs: transient
       // localCheckpoint RDDs (e.g. Dsir.selectTopK's feature frame) are
@@ -334,7 +341,7 @@ object Bench {
       // positions bounds the linger deterministically and keeps
       // cached_kb / RDD-count telemetry comparable across rounds.
       if ((pos & 15) == 15) System.gc()
-      (name, best, timed, tele)
+      (name, best, timed, tele.copy(events = tele.events ++ releases))
     }
     // crashed runs emit null, not their near-zero crash duration — a
     // consumer computing spread/mean from all_runs must not absorb them
@@ -353,9 +360,7 @@ object Bench {
     val total = results.map(_._2).sum
     val sf = sfDir.split("/sf").last
     val calRaw = calRuns.map(t => f"$t%.3f").mkString("[", ",", "]")
-    val gcMs = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans)
-      .asScala.map(_.getCollectionTime.max(0L)).sum
+    val gcMs = gcNowMs()
     val rssPeakKb = statusKb("VmHWM")
     // The stdout contract is ONE parseable JSON line, and the consumer
     // only keeps the last ~2000 chars of output — with 70+ queries the

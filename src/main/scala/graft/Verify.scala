@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.telemetry.Events
+
 /** Harness-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the external DuckDB compare. */
 object Verify {
@@ -17,26 +20,21 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // the query's scope tags the guard events it warns on stderr
+      Events.scoped(name) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in hand-authored SQL would otherwise make the
-    // consumer's json.load fail and silently void the correctness check.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Events.quote escapes ALL control chars: a tab or CR in hand-authored
+    // SQL would otherwise make the consumer's json.load fail and silently
+    // void the correctness check.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Events.quote(k)}: ${Events.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

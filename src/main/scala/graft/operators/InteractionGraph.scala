@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Fixpoint
+import graft.telemetry.Events
 
 /** Interaction-graph construction (A2): re-expression of
   * roleAnalysisTopology/.../bolts/InteractionGraphBolt.java:96-196.
@@ -270,16 +271,8 @@ object InteractionGraph {
       else {
         require(maxHubDegree >= 1, "commonNeighborRecs: maxHubDegree must be >= 1")
         val over = deg.filter(col("d") > maxHubDegree).localCheckpoint(true)
-        val n = over.count()
-        if (n > 0) {
-          val worst = over.orderBy(col("d").desc).limit(3)
-            .collect().map(r => s"${r.getString(0)}:${r.getLong(1)}")
-            .mkString(", ")
-          System.err.println(s"[graft] commonNeighborRecs: excluded $n " +
-            s"hub intermediate(s) over degree $maxHubDegree (worst: " +
-            s"$worst) — super-node guard; they still receive and issue " +
-            "recommendations, they just stop connecting everyone to everyone")
-        }
+        Events.guard("commonNeighborRecs", over, maxHubDegree, "d")(r =>
+          s"${r.getString(0)}:${r.getLong(1)}")
         deg.filter(col("d") <= maxHubDegree)
       }
     val adj = edges.select(col("u").as("a"), col("v").as("b"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.functions.TextFunctions
+import graft.telemetry.Events
 
 /** Location topic-model pipeline (locationTopicModelTopology):
   * language filter (F3/M1) → tokenize (T2) → vocab index (T3) →
@@ -319,11 +320,11 @@ object TopicModel {
         "vocabulary; shrink V (frequency-threshold the vocab) or pass " +
         "countsVia = \"join\" (the vocabulary-partitioned sweep, " +
         "bit-identical output)")
+    // within the cap but broadcast per sweep: a frequency-thresholded
+    // vocab or countsVia = "join" is the cure at this scale
     if (countsVia == "broadcast" && countsBytes > maxCountsBytes / 4)
-      System.err.println(s"[graft] trainGeoModel: K*V counts matrix is " +
-        s"$countsBytes bytes (K=$K, V=$V) — within maxCountsBytes=" +
-        s"$maxCountsBytes but broadcast per sweep; consider a " +
-        "frequency-thresholded vocab or countsVia=\"join\" at this scale")
+      Events.warn("broadcast_size", "trainGeoModel", "bytes" -> countsBytes,
+        "K" -> K, "V" -> V, "max_bytes" -> maxCountsBytes)
 
     // geography: unit-sphere Cartesian vectors (the qm domain the
     // reference ships; modelLocations' toSpherical inverts it)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.plans.Fixpoint
+import graft.telemetry.Events
 
 /** Training-data deduplication operators (north-star extensions,
   * BASELINE.json): exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -226,15 +227,6 @@ object Dedup {
         col("bk.band_key").as("band_key"): _*)
   }
 
-  /** Band keys whose occupancy exceeds `maxBucket` — the degenerate-key
-    * report behind the [[lshCandidates]] skew guard. Compact: one
-    * aggregate over (band, band_key), output bounded by the number of
-    * overloaded keys. */
-  def lshOverloadedKeys(banded: DataFrame, maxBucket: Int): DataFrame =
-    banded.groupBy(col("band"), col("band_key"))
-      .agg(count(lit(1)).as("occupancy"))
-      .filter(col("occupancy") > maxBucket)
-
   /** Candidate pairs from LSH buckets (a < b, distinct across bands).
     *
     * `maxBucket` is the band-key occupancy guard: within-bucket work is
@@ -242,8 +234,8 @@ object Dedup {
     * hashing half the corpus into a single band bucket) lands
     * O(n²) pair generation on one task. Keys over the cap are EXCLUDED
     * from candidate generation — and loudly: the exclusion count and
-    * worst occupancies go to stderr, and [[lshOverloadedKeys]] returns
-    * the same report for callers (no silent caps). Boilerplate-heavy
+    * worst occupancies go out as a `guard` event in the caller's query
+    * scope and on stderr (no silent caps). Boilerplate-heavy
     * keys are better handled by exact/chunk dedup; raising `nBits` /
     * band width is the recall-preserving mitigation. Default = no cap
     * (test-scale behavior unchanged). */
@@ -259,8 +251,9 @@ object Dedup {
   }
 
   /** The shared occupancy guard: drop rows whose `keyCols` group exceeds
-    * `maxBucket` rows, reporting the dropped keys on stderr (count +
-    * top occupancies). The report aggregate shuffles the same compact
+    * `maxBucket` rows, reporting the dropped keys as a `guard` event
+    * (recover those docs via exact/chunk dedup or a wider key, nBits /
+    * rowsPerBand). The report aggregate shuffles the same compact
     * key projection the candidate join shuffles anyway; the eager count
     * runs only when a cap is actually set. (package-visible: the
     * perceptual-fingerprint bucket join applies the same discipline —
@@ -274,15 +267,7 @@ object Dedup {
         .agg(count(lit(1)).as("occupancy"))
         .filter(col("occupancy") > maxBucket)
         .localCheckpoint(true)
-      val n = over.count()
-      if (n > 0) {
-        val worst = over.orderBy(col("occupancy").desc).limit(3)
-          .collect().map(_.getLong(keyCols.length)).mkString(", ")
-        System.err.println(s"[graft] $who: excluded $n overloaded " +
-          s"bucket key(s) over occupancy $maxBucket (worst: $worst) — " +
-          "degenerate-key guard; recover those docs via exact/chunk " +
-          "dedup or a wider key (nBits / rowsPerBand)")
-      }
+      Events.guard(who, over, maxBucket, "occupancy")(_.getLong(keyCols.length))
       df.join(broadcast(over.select(keyCols.map(col): _*)), keyCols, "left_anti")
     }
   }
@@ -499,8 +484,9 @@ object Dedup {
     *  - the symmetrized edge relation is semi-joined to the doc-id
     *    universe (an edge endpoint outside `docs` contributed nothing
     *    in the unrestricted formulation either — it had no label row)
-    *    and pre-partitioned by `dst` ONCE, so the loop-invariant
-    *    edge-side exchange is hoisted out of every round (guide §2.4);
+    *    and checkpointed once (not pre-partitioned: under adaptive
+    *    execution a checkpoint's partitioning reads as unknown, so each
+    *    round's join shuffles the edges on `dst` anyway);
     *  - the edge step and the pointer jump materialize as ONE
     *    checkpointed job per round instead of two — the jump self-join
     *    rides the same materialization, and the step's shuffles are
@@ -516,10 +502,7 @@ object Dedup {
       maxIters: Int = 30): DataFrame = {
     val docIds = docs.select(col(idCol).as("doc_id"))
     // Loop-invariant edge relation: symmetrized, restricted to endpoints
-    // in the doc-id universe, hash-partitioned by dst once — every
-    // round's edge-side exchange is pre-paid here (localCheckpoint
-    // preserves the physical partitioning, so EnsureRequirements only
-    // shuffles the label side of the per-round join).
+    // in the doc-id universe, materialized once.
     // Endpoints cast to the doc-id type so the loop's label column (and
     // the output schema) match the pre-r19 docs-derived formulation
     // exactly, whatever the pair relation's physical id type.
@@ -530,7 +513,6 @@ object Dedup {
         col("doc_a").cast(idType).as("dst")))
       .join(docIds.withColumnRenamed("doc_id", "src"), Seq("src"), "left_semi")
       .join(docIds.withColumnRenamed("doc_id", "dst"), Seq("dst"), "left_semi")
-      .repartition(col("dst"))
       .localCheckpoint()
     // Labels over edge-incident vertices only (src covers both endpoint
     // roles — the edge set is symmetrized above). Singletons rejoin at
@@ -615,7 +597,7 @@ object Dedup {
     * 100 TB, optionally with Hamming-1 probes to recover split pairs) —
     * and `maxBucket` enforces the bound at runtime: a degenerate
     * direction (zero vectors, a collapsed embedder) that floods one
-    * bucket gets excluded LOUDLY (stderr report, the
+    * bucket gets excluded LOUDLY (`guard` event, the
     * [[lshCandidates]] guard) instead of landing a quadratic mega-task.
     * Recall is approximate by construction — a near-dup pair straddling
     * a sign boundary in every probed bit is missed; exactly the standard

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions
+import graft.telemetry.Events
 
 /** Text-analysis operators for training-data pipelines (north-star
   * extensions): language ID, quality scoring, token counting, document
@@ -2040,20 +2041,14 @@ object TextMetrics {
     // while its postings are still corpus-scale join fuel — candidate
     // volume per query is bounded by the sum of its terms' posting
     // lengths, so the absolute bound is what survives a 100× corpus
-    // growth. Excluded tokens are reported loudly; exclusion is
+    // growth. Excluded tokens are reported as a `guard` event (raise
+    // maxPosting or lower maxDfPct to adjudicate them); exclusion is
     // score-consistent (df is per-token, so the surviving index is
     // IDENTICAL to running on a pre-filtered tf — ScaleSpec pins this).
     val dfRel = if (maxPosting == Int.MaxValue) pctPruned else {
       val over = pctPruned.filter(col("df") > maxPosting).localCheckpoint(true)
-      val n = over.count()
-      if (n > 0) {
-        val worst = over.orderBy(col("df").desc).limit(3).collect()
-          .map(r => s"${r.getString(0)}:${r.getLong(1)}").mkString(", ")
-        System.err.println(s"[graft] lexicalTopK: excluded $n token(s) " +
-          s"with postings over $maxPosting (worst: $worst) — " +
-          "degenerate-vocabulary guard; raise maxPosting or lower " +
-          "maxDfPct to adjudicate them explicitly")
-      }
+      Events.guard("lexicalTopK", over, maxPosting, "df")(r =>
+        s"${r.getString(0)}:${r.getLong(1)}")
       pctPruned.filter(col("df") <= maxPosting)
     }
     tf.join(broadcast(dfRel), "token")
@@ -2360,14 +2355,8 @@ object TextMetrics {
   val DefaultHotOccupancy: Int = 1 << 16
 
   /** Fingerprints over the occupancy cap, with exact distinct-doc and
-    * occurrence counts — the degenerate-key report behind the span
-    * family's skew guard (the [[Dedup.lshOverloadedKeys]] contract:
-    * callers get the same relation the guard prints). Compact: two
-    * combiner-friendly aggregates, output bounded by total/cap. */
-  def spanHotFingerprints(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, hotCap: Int): DataFrame =
-    hotFpStats(spanWindows(docs, idCol, textCol, k), hotCap)
-
+    * occurrence counts. Compact: two combiner-friendly aggregates,
+    * output bounded by total/cap. */
   private def hotFpStats(wins: DataFrame, hotCap: Int): DataFrame =
     wins.groupBy(col("fp"), col("doc_id"))
       .agg(count(lit(1)).as("_c"))
@@ -2394,7 +2383,7 @@ object TextMetrics {
     * (broadcast semi-join — no window ever forms), and run the window
     * device only on the cold tail, whose partitions are ≤ `hotCap`
     * rows BY CONSTRUCTION. Results are identical for any cap — the
-    * guard reports loudly (stderr + [[spanHotFingerprints]]) but drops
+    * guard reports loudly (a `guard` event) but drops
     * nothing.
     *
     * Hot-candidate derivation is SAMPLED since r19 (the carried
@@ -2423,36 +2412,10 @@ object TextMetrics {
       .filter(col("_nd") >= minDocs)
       .select(col("doc_id"), col("s"))
     if (hotCap == Int.MaxValue) denseRankStarts(wins)
-    else {
-      require(hotCap >= 1, s"$who: hotCap must be >= 1")
-      val m = math.max(1L, hotCap.toLong / 64L)
-      val hot =
-        if (m == 1L) hotFpStats(wins, hotCap).localCheckpoint(true)
-        else {
-          val cands = wins
-            .filter(pmod(xxhash64(col("fp"), col("doc_id"), col("s")),
-              lit(m)) === 0L)
-            .groupBy(col("fp")).agg(count(lit(1)).as("_sc"))
-            .filter(col("_sc") * m * 4L > hotCap.toLong)
-            .select(col("fp"))
-            .localCheckpoint(true)
-          if (cands.isEmpty) cands.sparkSession.createDataFrame(
-            cands.sparkSession.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-            hotFpStats(wins.limit(0), hotCap).schema)
-          else hotFpStats(
-              wins.join(broadcast(cands), Seq("fp"), "left_semi"), hotCap)
-            .localCheckpoint(true)
-        }
-      val nHot = hot.count()
-      if (nHot == 0) denseRankStarts(wins)
-      else {
-        val worst = hot.orderBy(col("occupancy").desc).limit(3)
-          .collect().map(_.getLong(2)).mkString(", ")
-        System.err.println(s"[graft] $who: $nHot hot fingerprint(s) " +
-          s"over occupancy $hotCap (worst: $worst) short-circuited " +
-          "via pre-counted distinct-doc verdicts — results unchanged, " +
-          "the skewed window partitions never form")
+    else hotKeys(wins, "fp", Seq(col("fp"), col("doc_id"), col("s")), hotCap,
+        who)(hotFpStats(_, hotCap)) match {
+      case None => denseRankStarts(wins)
+      case Some(hot) =>
         val hotDup = hot.filter(col("n_docs") >= minDocs.toLong)
           .select(col("fp"))
         val hotStarts = wins.join(broadcast(hotDup), Seq("fp"), "left_semi")
@@ -2460,17 +2423,38 @@ object TextMetrics {
         val cold = wins.join(broadcast(hot.select(col("fp"))),
           Seq("fp"), "left_anti")
         denseRankStarts(cold).unionByName(hotStarts)
-      }
     }
   }
 
-  /** Chunk hashes over the occupancy cap — the [[firstOccDup]] guard's
-    * report relation ([[Dedup.lshOverloadedKeys]] contract). */
-  def chunkHotHashes(docs: DataFrame, idCol: String, textCol: String,
-      maxTokens: Int, hotCap: Int): DataFrame =
-    chunk(docs, idCol, textCol, maxTokens)
-      .groupBy(col("chunk_md5")).agg(count(lit(1)).as("occupancy"))
-      .filter(col("occupancy") > hotCap)
+  /** The hot-key pre-count of [[duplicatedStarts]] and [[firstOccDup]]:
+    * `stats` (an aggregate by `key` with an `occupancy` column, filtered
+    * to occupancy over `hotCap`) of the keys over the cap, materialized
+    * and reported as a `guard` event; `None` when no key is hot. Caps
+    * of 128 and up derive candidates from a 1-in-m sample on
+    * `sampleCols` first and run `stats` only on them (see
+    * [[duplicatedStarts]]). */
+  private def hotKeys(src: DataFrame, key: String, sampleCols: Seq[Column],
+      hotCap: Int, who: String)(stats: DataFrame => DataFrame): Option[DataFrame] = {
+    require(hotCap >= 1, s"$who: hotCap must be >= 1")
+    val m = math.max(1L, hotCap.toLong / 64L)
+    val hot =
+      if (m == 1L) stats(src).localCheckpoint(true)
+      else {
+        val cands = src
+          .filter(pmod(xxhash64(sampleCols: _*), lit(m)) === 0L)
+          .groupBy(col(key)).agg(count(lit(1)).as("_sc"))
+          .filter(col("_sc") * m * 4L > hotCap.toLong)
+          .select(col(key))
+          .localCheckpoint(true)
+        if (cands.isEmpty) cands.sparkSession.createDataFrame(
+          cands.sparkSession.sparkContext.emptyRDD[Row], stats(src.limit(0)).schema)
+        else stats(src.join(broadcast(cands), Seq(key), "left_semi"))
+          .localCheckpoint(true)
+      }
+    val occ = hot.schema.fieldIndex("occupancy")
+    if (Events.guard(who, hot, hotCap, "occupancy")(_.getLong(occ)) == 0) None
+    else Some(hot)
+  }
 
   /** Per-occurrence duplicate flag over a [[chunk]] relation: `_dup` is
     * true for every occurrence of a `chunk_md5` EXCEPT the first in the
@@ -2484,7 +2468,7 @@ object TextMetrics {
     * broadcast, and flagged by comparing against the pre-computed
     * first occurrence; the row_number window runs only on the cold
     * tail (partitions ≤ `hotCap` rows by construction). Results
-    * identical for any cap; loud stderr + [[chunkHotHashes]] report.
+    * identical for any cap; hot hashes are reported as a `guard` event.
     * Hot candidates are SAMPLE-derived with an exact verify since r19
     * — same device, margins and m = hotCap/64 scaling as
     * [[duplicatedStarts]] (see there); caps under 128 keep the exact
@@ -2502,36 +2486,10 @@ object TextMetrics {
           .as("_first"))
       .filter(col("occupancy") > hotCap)
     if (hotCap == Int.MaxValue) windowed(chunks)
-    else {
-      require(hotCap >= 1, s"$who: hotCap must be >= 1")
-      val m = math.max(1L, hotCap.toLong / 64L)
-      val hot =
-        if (m == 1L) exactHot(chunks).localCheckpoint(true)
-        else {
-          val cands = chunks
-            .filter(pmod(xxhash64(col("chunk_md5"), col(idCol),
-              col("chunk_id")), lit(m)) === 0L)
-            .groupBy(col("chunk_md5")).agg(count(lit(1)).as("_sc"))
-            .filter(col("_sc") * m * 4L > hotCap.toLong)
-            .select(col("chunk_md5"))
-            .localCheckpoint(true)
-          if (cands.isEmpty) cands.sparkSession.createDataFrame(
-            cands.sparkSession.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-            exactHot(chunks.limit(0)).schema)
-          else exactHot(
-              chunks.join(broadcast(cands), Seq("chunk_md5"), "left_semi"))
-            .localCheckpoint(true)
-        }
-      val nHot = hot.count()
-      if (nHot == 0) windowed(chunks)
-      else {
-        val worst = hot.orderBy(col("occupancy").desc).limit(3)
-          .collect().map(_.getLong(1)).mkString(", ")
-        System.err.println(s"[graft] $who: $nHot hot chunk hash(es) " +
-          s"over occupancy $hotCap (worst: $worst) short-circuited " +
-          "via pre-computed first occurrences — results unchanged, " +
-          "the skewed window partitions never form")
+    else hotKeys(chunks, "chunk_md5", Seq(col("chunk_md5"), col(idCol), col("chunk_id")),
+        hotCap, who)(exactHot) match {
+      case None => windowed(chunks)
+      case Some(hot) =>
         val hotFlagged = chunks
           .join(broadcast(hot.select(col("chunk_md5"), col("_first"))),
             Seq("chunk_md5"))
@@ -2542,7 +2500,6 @@ object TextMetrics {
           Seq("chunk_md5"), "left_anti")
         windowed(cold).unionByName(
           hotFlagged.select(cold.columns.map(col) :+ col("_dup"): _*))
-      }
     }
   }
 

@@ -1,10 +1,10 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{coalesce, lit, udf}
 import org.apache.spark.sql.graft.CheckpointStats
+
+import graft.telemetry.Events
 
 /** The one driver-side convergence loop of the iterative operators
   * ([[graft.operators.DiscussionTree.withRoots]],
@@ -23,15 +23,10 @@ import org.apache.spark.sql.graft.CheckpointStats
   *
   * Every round's frame is lineage-truncated (an uncheckpointed loop's
   * plan tree doubles per self-join) through [[checkpoint]], which keeps
-  * the leaf's size estimate bounded for any round count. */
+  * the leaf's size estimate bounded for any round count. A converged
+  * loop records a `fixpoint` event with its round count, the converging
+  * round included. */
 object Fixpoint {
-
-  private val lastRounds = new ConcurrentHashMap[String, Int]()
-
-  /** Rounds the most recent `name` loop in this JVM ran, the converging
-    * round included; -1 before the first. Deterministic observability
-    * for the scale probes; no operator reads it. */
-  def rounds(name: String): Int = lastRounds.getOrDefault(name, -1)
 
   /** Eager `localCheckpoint` whose size estimate is clamped to Spark's
     * default once it no longer fits in a Long (see [[CheckpointStats]]);
@@ -57,7 +52,7 @@ object Fixpoint {
     }
     if (moved != 0)
       throw new IllegalStateException(s"$name did not converge after $maxRounds rounds")
-    lastRounds.put(name, round)
+    Events.record("fixpoint", name, "rounds" -> round)
     cur
   }
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.telemetry.Events
+
 /** A shared query-family cache: the set of `SparkEntry.queries` names
   * that consume it, plus the hook that drops it (unpersist + reference
   * drop). `consumers` is the single source of truth the Bench sweep uses
@@ -9,29 +11,14 @@ package graft.queries
   * new consumer sorted past the named release point (q1xx names sorted
   * before q2x and held family caches resident across the whole sweep).
   * CacheLifecycleSpec verifies the declared sets against the EMPIRICAL
-  * touch recording below, so a forgotten consumer fails `sbt test`
+  * `cache_touch` events, so a forgotten consumer fails `sbt test`
   * instead of silently inflating the bench. */
 final case class CacheFamily(consumers: Set[String], release: () => Unit)
 
-/** Empirical consumer recording for the shared caches. Harnesses
-  * (CacheLifecycleSpec, Bench) set [[current]] to the query name they
-  * are about to construct; every cache getter calls [[touch]] on every
-  * access (not just first population), so constructing each query once —
-  * caches warm, nothing re-built — yields the exact query→family
-  * consumption map with no hand maintenance. */
 object CacheRegistry {
-  @volatile var current: Option[String] = None
-  private val touchesMap =
-    scala.collection.mutable.Map.empty[String, Set[String]]
-
-  def touch(family: String): Unit = synchronized {
-    current.foreach { q =>
-      touchesMap(family) = touchesMap.getOrElse(family, Set.empty) + q
-    }
-  }
-
-  /** family → query names observed touching it since the last reset. */
-  def touches: Map[String, Set[String]] = synchronized(touchesMap.toMap)
-
-  def resetTouches(): Unit = synchronized(touchesMap.clear())
+  /** Every cache getter calls this on every access (not just first
+    * population): it records a `cache_touch` event in the active query
+    * scope, so constructing each query once in its own scope yields the
+    * exact query→family consumption map with no hand maintenance. */
+  def touch(family: String): Unit = Events.record("cache_touch", family)
 }

@@ -422,10 +422,9 @@ object OperatorQueries {
     // join 6.81 s vs broadcast 5.32 s — 1.28×, within the accepted bar;
     // the join sweep never materializes K×V anywhere, so it is the form
     // that survives a production vocabulary. Outputs are bit-identical
-    // (TopicModelTrainerSpec); the env knob remains for A/B.
+    // (TopicModelTrainerSpec).
     val model = TopicModel.trainGeoModel(geo,
-      numTopics = 4, numLocations = 5, iters = 3,
-      countsVia = sys.env.getOrElse("SPARK_GRAFT_Q135_COUNTS", "join"),
+      numTopics = 4, numLocations = 5, iters = 3, countsVia = "join",
       centroids = Some(cents))
     TopicModel.modelMatrices(spark, model)
       .withColumn("value", round(col("value").cast("decimal(28,10)"), 6)

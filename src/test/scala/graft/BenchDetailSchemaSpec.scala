@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.telemetry.Events
+
 /** Pins the bench_detail.json sidecar SCHEMA and the top-movers stderr
   * block (r20, VERDICT r19 item 7): at 250+ queries the stdout headline
   * is the tier-3 form (`"queries":{}`), so the sidecar is the ONLY
@@ -17,8 +19,11 @@ class BenchDetailSchemaSpec extends AnyFunSuite {
     rssPeakKb = 5678L,
     raw = """{"q01_a":[1.000,2.000,null],"q02_b":[0.500,0.400,0.450]}""",
     perQuery = Seq(
-        "q01_a" -> Bench.QueryTelemetry(55.0, 1L, 2L, 3L, Seq("tf"), 40L),
-        "q02_b" -> Bench.QueryTelemetry(60.0, 1L, 2L, 3L, Nil, 0L))
+        "q01_a" -> Bench.QueryTelemetry(55.0, 1L, 2L, 3L, Seq("tf"), 40L, Seq(
+          Events.Event(Some("q01_a"), "fixpoint", "withRoots", Seq("rounds" -> 3, "run" -> 1)),
+          Events.Event(Some("q01_a"), "cache_release", "tf",
+            Seq("persistent_rdds" -> 2, "run" -> 3)))),
+        "q02_b" -> Bench.QueryTelemetry(60.0, 1L, 2L, 3L, Nil, 0L, Nil))
       .map { case (k, t) => "\"" + k + "\":" + t.json }.mkString("{", ",", "}"),
     fl = """["q01_a"]""", sf = "0.1")
 
@@ -34,7 +39,10 @@ class BenchDetailSchemaSpec extends AnyFunSuite {
     val pq = (parsed \ "per_query" \ "q01_a")
       .asInstanceOf[org.json4s.JObject].obj.map(_._1)
     assert(pq == List("cal_q_ms", "rss_kb", "gc_ms", "cached_kb", "fams",
-      "codegen_compiles"))
+      "codegen_compiles", "events"))
+    val ev = (parsed \ "per_query" \ "q01_a" \ "events")(0)
+    assert(ev.asInstanceOf[org.json4s.JObject].obj.map(_._1) ==
+      List("query", "kind", "name", "rounds", "run"))
   }
 
   test("parseDetailBest extracts min-of-runs and skips crashed (null) runs") {

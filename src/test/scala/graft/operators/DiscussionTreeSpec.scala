@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.plans.Fixpoint
+import graft.telemetry.{Events, EventsSpec}
 
 /** J4 dummy-root synthesis, pointer-doubling root resolution (incl. cycle
   * detection), per-tree stats, and A1 nested-JSON assembly on hand-drawn
@@ -64,9 +64,10 @@ class DiscussionTreeSpec extends AnyFunSuite {
         null.asInstanceOf[String], null.asInstanceOf[String], null.asInstanceOf[String]) +:
       (1 until n).map(i => (f"t$i%03d", s"u$i", "x", ts(i % 60), false,
         f"t${i - 1}%03d", s"u${i - 1}", "x"))
-    val rootedDf = DiscussionTree.withRoots(DiscussionTree.nodes(normalized(rows)))
+    val (rootedDf, evs) =
+      Events.scoped("chain200")(DiscussionTree.withRoots(DiscussionTree.nodes(normalized(rows))))
     // 8 rounds move pointers (2^8 >= 199) and a 9th finds none moving
-    assert(Fixpoint.rounds("withRoots") == 9)
+    assert(EventsSpec.rounds(evs, "withRoots") == Seq(9))
     // the per-round self-join doubles the estimate's bit length; the
     // returned frame's estimate must still fit in a Long
     assert(rootedDf.queryExecution.optimizedPlan.stats.sizeInBytes <= Long.MaxValue)

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.telemetry.{Events, EventsSpec}
+
 /** [[InteractionGraph.triangleCounts]] — hand-counted fixtures (K4, a
   * triangle-free star, direction/multiplicity collapse) and a random
   * graph checked against brute-force enumeration. The operator's
@@ -203,7 +205,10 @@ class InteractionGraphSpec extends AnyFunSuite {
       ("l1", 1L, "l2", 1L), ("l1", 2L, "l3", 1L),
       ("l2", 1L, "l1", 1L), ("l2", 2L, "l3", 1L),
       ("l3", 1L, "l1", 1L), ("l3", 2L, "l2", 1L)))
-    assert(recs(star, cap = 2).isEmpty)
+    val (capped, evs) = Events.scoped("capped")(recs(star, cap = 2))
+    assert(capped.isEmpty)
+    // the hub (degree 3) is the one excluded intermediate
+    assert(EventsSpec.guards(evs) == Seq(("commonNeighborRecs", 1L, 2)))
   }
 
   test("degreeAssortativity: star is -1, path is -0.5, regular K4 is NULL") {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.telemetry.{Events, EventsSpec}
 
 /** Perceptual dHash image near-dup device (q199): the decode-side
   * kernel pinned against an independent closed-form reimplementation,
@@ -109,10 +110,15 @@ class DHashSpec extends AnyFunSuite {
     val uncapped = Multimodal.dhashNearDups(hashes, maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.size == 50 * 49 / 2 + 1, "uncapped: all flat pairs + the planted pair")
-    val capped = Multimodal.dhashNearDups(hashes, maxHamming = 6, maxBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (capped, evs) = Events.scoped("capped") {
+      Multimodal.dhashNearDups(hashes, maxHamming = 6, maxBucket = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(capped == Set((100L, 101L)),
       "capped: the degenerate key's quadratic bucket is excluded, the healthy pair survives")
+    val guards = EventsSpec.guards(evs)
+    assert(guards.map(g => (g._1, g._3)) == Seq(("dhashNearDups", 10)), guards)
+    assert(guards.head._2 > 0)
   }
 
   /** Independent closed-form audio envelope hash (never touches the

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.functions.TextFunctions
+import graft.telemetry.{Events, EventsSpec}
 
 /** Dedup / similarity pipeline invariants. */
 class PipelineSpec extends AnyFunSuite {
@@ -2125,6 +2126,14 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(4)))
       .sortBy(_._1).toSeq)
     assert(rws.distinct.size == 1, "chunkDedupRewrite diverged across caps")
+    // cap 1 trips both short-circuits, each reporting a guard event
+    val (_, evs) = Events.scoped("hot") {
+      TextMetrics.dupSpanCoverage(docs, "doc_id", "text", k = 3, minDocs = 2, hotCap = 1)
+      TextMetrics.chunkDedup(cdocs, "doc_id", "text", maxTokens = 2, hotCap = 1)
+    }
+    val guards = EventsSpec.guards(evs)
+    assert(guards.map(g => (g._1, g._3)) == Seq(("dupSpanCoverage", 1), ("chunkDedup", 1)), guards)
+    assert(guards.forall(_._2 > 0))
   }
 
   test("sampled hot-candidate path (hotCap >= 128, m > 1): results " +

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.telemetry.{Events, EventsSpec}
 
 /** The shared convergence driver: bounded size estimates by
-  * construction, the round-count readback, the loud refusal, and the
-  * checkpoint's kept partitioning. */
+  * construction, the per-scope round-count event, the loud refusal, and
+  * the checkpoint's kept partitioning. */
 class FixpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -24,14 +25,16 @@ class FixpointSpec extends AnyFunSuite {
   test("a 30-round self-joining loop keeps its size estimate within a Long every round") {
     val seen = scala.collection.mutable.ArrayBuffer.empty[BigInt]
     val seed = Fixpoint.checkpoint(spark.range(500).select(col("id"), lit(0L).as("r")))
-    val out = Fixpoint.iterate("selfJoin30", seed, maxRounds = 40) { (cur, tick) =>
-      seen += sizeOf(cur)
-      cur.join(cur.select(col("id").as("_o")), col("id") === col("_o"))
-        .filter(tick(col("r") < 29))
-        .select(col("id"), (col("r") + 1).as("r"))
+    val (out, evs) = Events.scoped("selfJoin30") {
+      Fixpoint.iterate("selfJoin30", seed, maxRounds = 40) { (cur, tick) =>
+        seen += sizeOf(cur)
+        cur.join(cur.select(col("id").as("_o")), col("id") === col("_o"))
+          .filter(tick(col("r") < 29))
+          .select(col("id"), (col("r") + 1).as("r"))
+      }
     }
     seen += sizeOf(out)
-    assert(Fixpoint.rounds("selfJoin30") == 30)
+    assert(EventsSpec.rounds(evs, "selfJoin30") == Seq(30))
     assert(seen.length == 31)
     assert(seen.forall(_ <= Long.MaxValue), s"estimates: ${seen.map(_.bitLength)}")
     assert(out.agg(min("r"), max("r"), count(lit(1))).head().toSeq == Seq(30L, 30L, 500L))
@@ -59,6 +62,29 @@ class FixpointSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange"), plan)
       assert(agg.count() == 500L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("concurrent loops of the same name each record their rounds in their own scope") {
+    // a loop that stops ticking after `k` rounds converges in k + 1
+    def loop(k: Int): Seq[Int] = {
+      val seed = Fixpoint.checkpoint(spark.range(20).select(col("id"), lit(0L).as("r")))
+      EventsSpec.rounds(Events.scoped(s"loop$k") {
+        Fixpoint.iterate("sameName", seed, maxRounds = 20) { (cur, tick) =>
+          cur.filter(tick(col("r") < k)).select(col("id"), (col("r") + 1).as("r"))
+        }
+      }._2, "sameName")
+    }
+    val got = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = Seq(2, 7).map { k =>
+      val t = new Thread(() => { start.await(); got.put(k, loop(k)) })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(got.get(2) == Seq(3))
+    assert(got.get(7) == Seq(8))
   }
 
   test("iterate refuses loudly, naming the loop, when maxRounds do not converge") {

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.operators.InteractionGraph
 import graft.pipeline.{Curate, Dedup, Similarity}
+import graft.telemetry.{Events, EventsSpec}
 
 /** Empirical 10× scale probes for the heaviest operator families —
   * redesigned in r20 (VERDICT r19 item 1) around DETERMINISTIC primary
@@ -90,10 +91,10 @@ class ScaleProbeSpec extends AnyFunSuite {
       val pairs = spark.range(n.toLong - 1)
         .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
         .filter(col("doc_a") % 7 =!= 3) // break into several components
-      val t = timeOf3 {
-        Dedup.nearDupClusters(docs, pairs, "doc_id").count()
+      val (t, evs) = Events.scoped(s"chain$n") {
+        timeOf3(Dedup.nearDupClusters(docs, pairs, "doc_id").count())
       }
-      (t, Fixpoint.rounds("nearDupClusters"))
+      (t, EventsSpec.rounds(evs, "nearDupClusters").last)
     }
     run(300) // warmup (JIT, codegen caches)
     val (base, baseRounds) = run(3000)
@@ -228,10 +229,10 @@ class ScaleProbeSpec extends AnyFunSuite {
         .unionByName(spark.range(n.toLong / 10)
           .select((col("id") * 10).as("author_id"),
             (col("id") * 10 + 5).as("target_user_id")))
-      val t = timeOf3 {
-        InteractionGraph.connectedComponents(inter).count()
+      val (t, evs) = Events.scoped(s"chain$n") {
+        timeOf3(InteractionGraph.connectedComponents(inter).count())
       }
-      (t, Fixpoint.rounds("connectedComponents"))
+      (t, EventsSpec.rounds(evs, "connectedComponents").last)
     }
     run(300) // warmup
     val (base, baseRounds) = run(3000)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.telemetry.{Events, EventsSpec}
 
 /** Scale-lever invariants: salted joins are result-identical and
   * actually spread the hot key; bucketed joins are exchange-free. */
@@ -882,9 +883,12 @@ class ScaleSpec extends AnyFunSuite {
     def pairs(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = pairs(Dedup.minhashNearDups(
+    val (capped, evs) = Events.scoped("capped")(pairs(Dedup.minhashNearDups(
       (boiler ++ clean).toDF("doc_id", "text"), "doc_id", "text",
-      maxBucket = 10))
+      maxBucket = 10)))
+    val guards = EventsSpec.guards(evs)
+    assert(guards.map(g => (g._1, g._3)) == Seq(("lshCandidates", 10)), guards)
+    assert(guards.head._2 > 0)
     // no boiler pair survives candidate generation (bounded per-task
     // work), and the clean portion is bit-identical to an uncapped run
     // without the degenerate docs
@@ -892,13 +896,9 @@ class ScaleSpec extends AnyFunSuite {
     assert(capped ==
       pairs(Dedup.minhashNearDups(clean.toDF("doc_id", "text"), "doc_id", "text")))
     assert(capped.contains((1L, 2L)), "guard must not eat genuine near-dups")
-    // the report relation is caller-visible (no silent caps)
-    val banded = Dedup.lshBands(Dedup.minhashSignatures(
-      Dedup.shingleSets((boiler ++ clean).toDF("doc_id", "text"),
-        "doc_id", "text", 3), 8), 8, 2)
-    val over = Dedup.lshOverloadedKeys(banded, 10)
-    assert(over.count() > 0)
-    assert(over.select(max(col("occupancy"))).head().getLong(0) == 30L)
+    // the report is caller-visible (no silent caps): every boilerplate
+    // band key holds all 30 docs
+    assert(evs.head.fields.toMap.apply("worst") == Seq(30L, 30L, 30L))
 
     // sign-LSH flavor: 20 identical vectors flood bucket 15; the
     // genuine near-dup pair in bucket 14 survives the cap

@@ -3,11 +3,12 @@ package graft.runner
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
-import graft.queries.CacheRegistry
+import graft.telemetry.Events
 
 /** Pins the declared cache-family consumer sets (SparkEntry.cacheFamilies)
-  * to the EMPIRICAL CacheRegistry touches: every query is constructed once
-  * at sf0.001 in the exact Bench sweep order starting from cold caches, so
+  * to the EMPIRICAL `cache_touch` events: every query is constructed once,
+  * in its own event scope, at sf0.001 in the exact Bench sweep order
+  * starting from cold caches, so
   * the recorded map reproduces the sweep's warm/cold pattern — including
   * the transitive cold-build edges (the first clusters consumer also
   * touches minhash). A new query that rides a shared cache without being
@@ -25,15 +26,12 @@ class CacheLifecycleSpec extends AnyFunSuite {
         s"family '$fam' declares unknown consumers: ${unknown.mkString(", ")}")
     }
     SparkEntry.cacheFamilies.values.foreach(_.release()) // cold start
-    CacheRegistry.resetTouches()
     val names = SparkEntry.queries.keys.toSeq.sortBy(SparkEntry.sweepOrder)
     try {
-      names.foreach { n =>
-        CacheRegistry.current = Some(n)
-        try SparkEntry.queries(n)(spark, dir) // construction touches caches
-        finally CacheRegistry.current = None
-      }
-      val empirical = CacheRegistry.touches
+      // construction touches caches
+      val touches = names.flatMap(n => Events.scoped(n)(SparkEntry.queries(n)(spark, dir))._2)
+        .filter(_.kind == "cache_touch")
+      val empirical = touches.groupMap(_.name)(_.query.get).map { case (f, qs) => f -> qs.toSet }
       val declared = SparkEntry.cacheFamilies.map { case (k, f) => k -> f.consumers }
       val fams = (empirical.keySet ++ declared.keySet).toSeq.sorted
       val diffs = fams.flatMap { f =>
@@ -45,9 +43,6 @@ class CacheLifecycleSpec extends AnyFunSuite {
       }
       assert(diffs.isEmpty, "declared/empirical consumer mismatch:\n" +
         diffs.mkString("\n"))
-    } finally {
-      CacheRegistry.resetTouches()
-      SparkEntry.cacheFamilies.values.foreach(_.release())
-    }
+    } finally SparkEntry.cacheFamilies.values.foreach(_.release())
   }
 }
