@@ -2,198 +2,37 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.types.Decimal
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CountRanges, CountRlike, CountSubstrs, DecodeBytes, DecodeHtmlRefs, DecodePage, DetectCharset, DotLongs, MaxAbsLongs, NfcNormalize, QuantizeVec, RedactCards, RobotsMatch, Sq8SqErrLongs, SqDistLongs, StemTokens, SubLongs, TokenizeMixed}
+import graft.functions.{BinaryKernelCall, Kernels, UnaryKernelCall}
 
-/** Session extensions registering graft's native Catalyst expressions —
-  * apply with `.withExtensions(new GraftExtensions)` (as
-  * [[Tables.session]] does) or `spark.sql.extensions=graft.GraftExtensions`
+/** Session extensions registering graft's native Catalyst kernels (one
+  * per [[Kernels]] row) — apply with `.withExtensions(new GraftExtensions)`
+  * (as [[Tables.session]] does) or `spark.sql.extensions=graft.GraftExtensions`
   * on spark-submit. Functions registered here are available to SQL text
   * and to `call_function` alike. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("stem_tokens"),
-      new ExpressionInfo(classOf[StemTokens].getName, "stem_tokens"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // explicit arity check: children.head would silently drop extra
-        // arguments and throw a bare empty-head error on zero
-        require(children.length == 1,
-          s"stem_tokens expects exactly 1 argument, got ${children.length}")
-        StemTokens(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("vec_quantize"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "vec_quantize"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"vec_quantize expects (array, scale), got ${children.length} arguments")
-        // the scale is a plan-time constant, not a per-row column
-        require(children(1).foldable, "vec_quantize scale must be a literal")
-        val scale = children(1).eval() match {
-          case d: java.lang.Double => d.doubleValue
-          case f: java.lang.Float => f.doubleValue
-          case i: java.lang.Integer => i.doubleValue
-          case l: java.lang.Long => l.doubleValue
-          case d: Decimal => d.toDouble
-          case other => throw new IllegalArgumentException(
-            s"vec_quantize scale must be numeric, got $other")
-        }
-        QuantizeVec(children.head, scale)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("dot_longs"),
-      new ExpressionInfo(classOf[DotLongs].getName, "dot_longs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"dot_longs expects exactly 2 arguments, got ${children.length}")
-        DotLongs(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("maxabs_longs"),
-      new ExpressionInfo(classOf[MaxAbsLongs].getName, "maxabs_longs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"maxabs_longs expects exactly 1 argument, got ${children.length}")
-        MaxAbsLongs(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_sqerr_longs"),
-      new ExpressionInfo(classOf[Sq8SqErrLongs].getName, "sq8_sqerr_longs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"sq8_sqerr_longs expects exactly 1 argument, got ${children.length}")
-        Sq8SqErrLongs(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"nfc_normalize expects exactly 1 argument, got ${children.length}")
-        NfcNormalize(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("detect_charset"),
-      new ExpressionInfo(classOf[DetectCharset].getName, "detect_charset"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"detect_charset expects exactly 1 argument, got ${children.length}")
-        DetectCharset(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("decode_bytes"),
-      new ExpressionInfo(classOf[DecodeBytes].getName, "decode_bytes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"decode_bytes expects exactly 1 argument, got ${children.length}")
-        DecodeBytes(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("decode_page"),
-      new ExpressionInfo(classOf[DecodePage].getName, "decode_page"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"decode_page expects exactly 1 argument, got ${children.length}")
-        DecodePage(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("decode_html_refs"),
-      new ExpressionInfo(classOf[DecodeHtmlRefs].getName, "decode_html_refs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"decode_html_refs expects exactly 1 argument, got ${children.length}")
-        DecodeHtmlRefs(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("count_ranges"),
-      new ExpressionInfo(classOf[CountRanges].getName, "count_ranges"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"count_ranges expects (str, spec), got ${children.length} arguments")
-        require(children(1).foldable, "count_ranges spec must be a literal")
-        val spec = children(1).eval() match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => throw new IllegalArgumentException(
-            s"count_ranges spec must be a string literal, got $other")
-        }
-        CountRanges(children.head, spec)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("redact_cards"),
-      new ExpressionInfo(classOf[RedactCards].getName, "redact_cards"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"redact_cards expects exactly 1 argument, got ${children.length}")
-        RedactCards(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("count_substrs"),
-      new ExpressionInfo(classOf[CountSubstrs].getName, "count_substrs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"count_substrs expects (str, grams), got ${children.length} arguments")
-        // the gram table is a plan-time constant array
-        require(children(1).foldable, "count_substrs grams must be a literal")
-        val arr = children(1).eval() match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            (0 until a.numElements()).map { i =>
-              require(!a.isNullAt(i), "count_substrs grams must be non-null")
-              a.getUTF8String(i).toString
-            }.toSeq
-          case other => throw new IllegalArgumentException(
-            s"count_substrs grams must be a string array literal, got $other")
-        }
-        CountSubstrs(children.head, arr)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("tokenize_mixed"),
-      new ExpressionInfo(classOf[TokenizeMixed].getName, "tokenize_mixed"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"tokenize_mixed expects exactly 1 argument, got ${children.length}")
-        TokenizeMixed(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("robots_match"),
-      new ExpressionInfo(classOf[RobotsMatch].getName, "robots_match"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"robots_match expects (pattern, path), got ${children.length} arguments")
-        RobotsMatch(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("count_rlike"),
-      new ExpressionInfo(classOf[CountRlike].getName, "count_rlike"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"count_rlike expects (array, pattern), got ${children.length} arguments")
-        // the pattern is a plan-time constant compiled once
-        require(children(1).foldable, "count_rlike pattern must be a literal")
-        val pat = children(1).eval() match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => throw new IllegalArgumentException(
-            s"count_rlike pattern must be a string literal, got $other")
-        }
-        CountRlike(children.head, pat)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sub_longs"),
-      new ExpressionInfo(classOf[SubLongs].getName, "sub_longs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"sub_longs expects exactly 2 arguments, got ${children.length}")
-        SubLongs(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sqdist_longs"),
-      new ExpressionInfo(classOf[SqDistLongs].getName, "sqdist_longs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"sqdist_longs expects exactly 2 arguments, got ${children.length}")
-        SqDistLongs(children.head, children(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Kernels.all.foreach { k =>
+      val cls = if (k.inputs.length == 2) classOf[BinaryKernelCall]
+        else classOf[UnaryKernelCall]
+      ext.injectFunction((
+        FunctionIdentifier(k.name),
+        new ExpressionInfo(cls.getName, k.name),
+        (children: Seq[Expression]) => {
+          // checked first, so a wrong count fails with the kernel's usage
+          require(children.length == k.arity, k.arityMessage(children.length))
+          (k.literal, children) match {
+            case (Some(l), Seq(child, arg)) =>
+              // a plan-time constant, prepared once per call, not per row
+              require(arg.foldable, s"${k.name} ${l.param} must be a literal")
+              val v = l.read.applyOrElse(arg.eval(), (other: Any) =>
+                throw new IllegalArgumentException(
+                  s"${k.name} ${l.param} must be ${l.kind}, got $other"))
+              UnaryKernelCall(k.name, child, Some(v))
+            case (None, Seq(child)) => UnaryKernelCall(k.name, child)
+            case (None, Seq(left, right)) => BinaryKernelCall(k.name, left, right)
+          }
+        }))
+    }
 }

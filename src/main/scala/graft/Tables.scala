@@ -86,11 +86,6 @@ object Tables {
       else d
     })
 
-  /** Register all tables as temp views named exactly like the parquet
-    * files, so `spark.sql` text matches the DuckDB oracle text. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Session defaults shared by Verify / Bench / tests. local[*] here is a
     * stand-in for a real cluster: shuffle partitions are sized to cores,
     * AQE handles skew/coalescing, and broadcast joins stay enabled so the

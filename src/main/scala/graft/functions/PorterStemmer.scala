@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
+
 /** The classic Porter stemming algorithm (M.F. Porter, "An algorithm for
   * suffix stripping", Program 14(3), 1980) — a from-scratch Scala
   * implementation of the published rules.
@@ -150,4 +153,22 @@ object PorterStemmer {
   def stem(word: String): String =
     if (word == null || word.length <= 2) word
     else step5b(step5a(step4(step3(step2(step1c(step1b(step1a(word))))))))
+}
+
+/** The `stem_tokens` kernel: Porter-stem every element of a token
+  * array, null elements passing through. */
+object StemTokens {
+  def evalArray(arr: ArrayData): ArrayData = {
+    val n = arr.numElements()
+    val out = new Array[AnyRef](n)
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) {
+        out(i) = UTF8String.fromString(
+          PorterStemmer.stem(arr.getUTF8String(i).toString))
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 }

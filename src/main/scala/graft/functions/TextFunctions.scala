@@ -35,7 +35,7 @@ object TextFunctions {
     * split on `[ \t\n\f\r]+`, then route no-space-script runs
     * (CJK Han/kana, Thai, Lao, Myanmar, Khmer —
     * [[TextKernels.noSpaceRanges]]) to overlapping character BIGRAMS
-    * via the native [[TokenizeMixed]] expression, so zh/ja/th text
+    * via the native `tokenize_mixed` kernel, so zh/ja/th text
     * stops degenerating into one giant "token" per document. The
     * routing is per-RUN (self-routing by codepoint class), so mixed
     * EN+CJK text segments both halves correctly — no per-document
@@ -84,7 +84,7 @@ object TextFunctions {
     filter(tokens, t => !array_contains(lit(englishStopwords.toArray), t))
 
   /** T2 — Porter-stem each token ([[PorterStemmer]], vendored classic
-    * algorithm) through the native [[StemTokens]] Catalyst expression:
+    * algorithm) through the native `stem_tokens` kernel ([[Kernels]]):
     * no UDF serialization boundary, inlines into whole-stage codegen.
     * Requires [[graft.GraftExtensions]] on the session (every
     * [[graft.Tables.session]] registers it; external sessions set
@@ -165,10 +165,6 @@ object TextFunctions {
     }
     packed.reduce(_ + _)
   }
-
-  /** 16-bit SimHash (demo width; near-dup use wants [[simhashBits]]'s
-    * default 60). */
-  def simhash16(tokens: Column): Column = simhashBits(tokens, 16)
 
   /** Deterministic 64-bit-ish document fingerprint: first 15 hex chars of
     * md5 as a big-int-safe long (driver-exact in any engine with md5+conv). */

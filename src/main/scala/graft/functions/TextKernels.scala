@@ -2,11 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType}
 
 /** Native token-array predicate counting — the codegen replacement for
   * the `size(filter(tokens, x => x.rlike(pat)))` HOF pattern
@@ -16,12 +12,14 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, St
   * `rlike` inside a lambda re-matches via its own machinery per row.
   * Here the Pattern compiles ONCE at plan time and one primitive loop
   * walks the unsafe array. Interpreted eval and codegen share the
-  * kernel (the [[StemTokens]]/[[VectorKernels]] discipline).
+  * kernel (every [[Kernels]] row calls one kernel on both paths).
   */
 object TextKernels {
-  /** # elements where `p.find()` matches (unanchored — `rlike`
-    * semantics); null elements count as non-matches, exactly as a
-    * null-returning filter lambda excludes its row. */
+  /** The `count_rlike` kernel: # elements where `p.find()` matches
+    * (unanchored — `rlike` semantics, Java regex: stay inside the
+    * Java/RE2-common subset when the count feeds a hashed output); null
+    * elements count as non-matches, exactly as a null-returning filter
+    * lambda excludes its row. */
   def countRlike(arr: ArrayData, p: Pattern): Long = {
     val n = arr.numElements()
     var cnt = 0L
@@ -34,8 +32,10 @@ object TextKernels {
     cnt
   }
 
-  /** Unicode NFC; the common already-normalized case short-circuits
-    * without re-encoding. */
+  /** The `nfc_normalize` kernel (named after DuckDB's built-in, so
+    * oracle SQL reads identically): Unicode NFC, so canonically
+    * equivalent sequences (é vs e + U+0301) compare equal; the common
+    * already-normalized case short-circuits without re-encoding. */
   def nfc(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
     val str = s.toString
     if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
@@ -362,7 +362,7 @@ object TextKernels {
     sum % 10 == 0
   }
 
-  /** robots.txt glob match (the [[RobotsMatch]] kernel): `pattern`
+  /** robots.txt glob match (the `robots_match` kernel): `pattern`
     * matches a PREFIX of `path` anchored at position 0 — the RFC 9309
     * rule ("/q" matches every path under /q) — with `*` spanning any
     * run (greedy, backtracking) and a single trailing `$` anchoring
@@ -401,7 +401,7 @@ object TextKernels {
     pi == np && (!full || si == ns)
   }
 
-  /** Parse a [[CountRanges]] class spec — classes separated by `;`,
+  /** Parse a `count_ranges` class spec — classes separated by `;`,
     * each a run of codepoint items (`\uXXXX` escapes or literal
     * characters) optionally joined into ranges by `-` — into per-class
     * flattened [lo, hi, lo, hi, …] arrays. Plan-time only. */
@@ -434,14 +434,14 @@ object TextKernels {
       out.toArray
     }
 
-  /** Single-pass multi-class codepoint counting — the [[CountRanges]]
+  /** Single-pass multi-class codepoint counting — the `count_ranges`
     * kernel: ONE walk over the string's codepoints increments every
     * class whose ranges contain the point, replacing one strip-diff
     * `length(x) - length(regexp_replace(x, class, ''))` full-text
     * regex pass (plus its rebuilt string) PER CLASS. Count semantics
     * are identical to the strip-diff device: both count CODEPOINTS
     * (Spark `length` is UTF8String.numChars), and a codepoint in k
-    * classes increments all k. */
+    * classes increments all k. One count per class, in spec order. */
   def countRanges(s: org.apache.spark.unsafe.types.UTF8String,
       classes: Array[Array[Int]]): ArrayData = {
     val str = s.toString
@@ -570,10 +570,14 @@ object TextKernels {
     out
   }
 
-  /** [[CountSubstrs]] kernel: overlapping occurrence counts of each
-    * gram in the string, one forward indexOf walk per gram (grams are
-    * plan-time constants, typically tens — the whole profile matching
-    * stage collapses into one scan projection). Empty grams count 0. */
+  /** The `count_substrs` kernel: overlapping occurrence counts of each
+    * gram in the string, in gram order, one forward indexOf walk per
+    * gram (grams are plan-time constants, typically tens — the whole
+    * profile matching stage collapses into one scan projection, zero
+    * shuffles). Empty grams count 0. Matching is char-substring based:
+    * counts equal the position-window form only for grams whose char
+    * length equals their codepoint length (callers with window
+    * semantics must require BMP grams — langIdNgram does). */
   def countSubstrs(s: org.apache.spark.unsafe.types.UTF8String,
       grams: Array[String]): ArrayData = {
     val str = s.toString
@@ -592,7 +596,9 @@ object TextKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** [[TokenizeMixed]] kernel: UTF8String in, string array out. */
+  /** The `tokenize_mixed` kernel: UTF8String in, string array out. The
+    * lowercase is composed OUTSIDE (the caller wraps `lower()`), keeping
+    * Spark's own casing semantics. */
   def tokenizeMixed(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
     val toks = tokenizeMixedCore(s.toString)
     val arr = new Array[Any](toks.length)
@@ -605,38 +611,8 @@ object TextKernels {
   }
 }
 
-/** `nfc_normalize(str)`: Unicode NFC normalization via
-  * `java.text.Normalizer` — named after DuckDB's built-in of the same
-  * name so oracle SQL reads identically. Spark has no built-in
-  * normalization; the HOF-free unary expression keeps it inside
-  * whole-stage codegen. Canonically-equivalent byte sequences (é vs
-  * e + U+0301) normalize to one form — the precondition for
-  * canonical text dedup over real-world corpora. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.nfc(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.nfc($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-
-  override def prettyName: String = "nfc_normalize"
-}
-
 /** Charset front-door kernels: BOM detection, strict UTF-8 validation,
-  * WHATWG windows-1252 fallback — shared by [[DetectCharset]] / [[DecodeBytes]].
+  * WHATWG windows-1252 fallback — behind `decode_page`.
   * The reference's deserializer hardcodes UTF-8
   * (`roleAnalysisTopology/.../util/JacksonScheme.java:30-38`); a real
   * crawl carries BOM'd and Windows-1252/Latin-1 content that would
@@ -704,9 +680,6 @@ object CharsetKernels {
     else if (isValidUtf8(b)) "utf-8"
     else "cp1252"
 
-  def detect(b: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(charsetOf(b))
-
   /** The WHATWG windows-1252 mapping for 0x80–0x9F (index = byte −
     * 0x80). The JDK's own windows-1252 charset leaves its five
     * unassigned bytes (0x81 0x8D 0x8F 0x90 0x9D) as U+FFFD — lossy;
@@ -719,24 +692,21 @@ object CharsetKernels {
     0x02DC, 0x2122, 0x0161, 0x203A, 0x0153, 0x009D, 0x017E, 0x0178)
     .map(_.toChar)
 
-  /** One-scan combined form for [[graft.functions.DecodePage]]: the
-    * detection runs once and both the label and the decoded text come
-    * back in a struct row. */
+  /** The `decode_page` kernel: struct(charset, text) from ONE
+    * detection scan (the strict-UTF-8 validation pass runs once per
+    * page, however many of the two fields a query reads). The text is
+    * decoded under the detected charset, BOM stripped: the BOM'd and
+    * UTF-16 arms use the JDK's replacement-char decode (a BOM is
+    * trusted; a malformed tail yields U+FFFD rather than dropping the
+    * document); the valid-UTF-8 arm is zero-copy; the CP1252 fallback
+    * is a direct byte→char table (WHATWG-total, injective, so the
+    * original bytes are always recoverable). */
   def decodePage(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
     val cs = charsetOf(b)
     org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString(cs),
       decodeAs(b, cs))
   }
-
-  /** Decode under the detected charset, BOM stripped. The BOM'd and
-    * UTF-16 arms use the JDK's replacement-char decode (a BOM is
-    * trusted; a malformed tail yields U+FFFD rather than dropping the
-    * document); the valid-UTF-8 arm is zero-copy; the CP1252 fallback
-    * is a direct byte→char table (WHATWG-total, injective, so the
-    * original bytes are always recoverable). */
-  def decode(b: Array[Byte]): org.apache.spark.unsafe.types.UTF8String =
-    decodeAs(b, charsetOf(b))
 
   private def decodeAs(b: Array[Byte],
       cs: String): org.apache.spark.unsafe.types.UTF8String = {
@@ -761,332 +731,4 @@ object CharsetKernels {
         UTF8String.fromString(new String(out))
     }
   }
-}
-
-/** `detect_charset(bin)`: the charset front door's detection label —
-  * one of utf-8-bom / utf-16le / utf-16be / utf-8 / cp1252 (the
-  * audit-ledger column beside [[DecodeBytes]]' text). */
-case class DetectCharset(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"detect_charset requires binary, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    CharsetKernels.detect(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharsetKernels$$.MODULE$$.detect($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DetectCharset =
-    copy(child = newChild)
-
-  override def prettyName: String = "detect_charset"
-}
-
-/** `decode_bytes(bin)`: raw fetched bytes → text under the
-  * [[DetectCharset]] policy (BOM stripped, strict-validated UTF-8
-  * zero-copy, WHATWG-CP1252 fallback so nothing mojibakes or drops). */
-case class DecodeBytes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"decode_bytes requires binary, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    CharsetKernels.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharsetKernels$$.MODULE$$.decode($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeBytes =
-    copy(child = newChild)
-
-  override def prettyName: String = "decode_bytes"
-}
-
-/** `decode_page(bin)`: the charset front door as ONE scan —
-  * struct(charset, text). [[DetectCharset]] + [[DecodeBytes]] each run
-  * the detection (a full strict-UTF-8 validation pass over the
-  * payload), so a query projecting BOTH validates every document's
-  * bytes twice; the ingest hot path uses this combined form and reads
-  * the two fields out of the struct. */
-case class DecodePage(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"decode_page requires binary, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("charset", StringType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("text", StringType,
-        nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    CharsetKernels.decodePage(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharsetKernels$$.MODULE$$.decodePage($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodePage =
-    copy(child = newChild)
-
-  override def prettyName: String = "decode_page"
-}
-
-/** `decode_html_refs(str)`: single-pass HTML character-reference
-  * decode (see [[TextKernels.decodeHtmlRefs]]) — the front door's
-  * entity stage as ONE codegen'd scan instead of a per-codepoint
-  * regexp_replace chain. */
-case class DecodeHtmlRefs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"decode_html_refs requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.decodeHtmlRefs(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.decodeHtmlRefs($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeHtmlRefs =
-    copy(child = newChild)
-
-  override def prettyName: String = "decode_html_refs"
-}
-
-/** `redact_cards(str)`: Luhn-verified card-number EXCISION — the
-  * other half of the q239 detection story (see
-  * [[TextKernels.redactCards]]): every maximal 13–19-digit run whose
-  * mod-10 checksum holds is replaced by `<CARD>` in one scan; invalid
-  * runs (order ids, ISBNs) and runs outside card lengths pass through
-  * untouched. A regex cannot decide this (the checksum is not
-  * regular), so the scrub path needs the native expression. */
-case class RedactCards(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"redact_cards requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.redactCards(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.redactCards($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RedactCards =
-    copy(child = newChild)
-
-  override def prettyName: String = "redact_cards"
-}
-
-/** `count_ranges(str, 'spec')`: per-class codepoint counts over
-  * explicit ranges in ONE scan (see [[TextKernels.countRanges]]) —
-  * the codegen replacement for a strip-diff regex pass per class
-  * (q241 ran seven `regexp_replace` full-text passes per row; this is
-  * one walk whatever the class count). The spec is a plan-time string
-  * literal: classes separated by `;`, each a run of `\uXXXX` escapes
-  * or literal characters with `-` ranges — the same text the regex
-  * classes used, so the ranges cannot drift. Returns
-  * `array<bigint>`, one count per class, in spec order. */
-case class CountRanges(child: Expression, spec: String)
-    extends UnaryExpression {
-
-  @transient private lazy val classes: Array[Array[Int]] =
-    TextKernels.parseRangeSpec(spec)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"count_ranges requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.countRanges(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], classes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val clsRef = ctx.addReferenceObj("countRangesClasses", classes,
-      "int[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.countRanges($c, $clsRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CountRanges =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_ranges"
-}
-
-/** `robots_match(pattern, path)`: RFC 9309 rule-pattern glob against
-  * a path+query (see [[TextKernels.robotsMatch]]) — anchored-prefix
-  * semantics, `*` wildcards, trailing `$` end anchor. Codegen'd
-  * two-pointer; patterns arrive per ROW (the rules relation), so a
-  * regex compile per pair is exactly what this avoids. */
-case class RobotsMatch(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"robots_match requires (string, string), got ${l.catalogString}, ${r.catalogString}")
-    }
-
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextKernels.robotsMatch(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.robotsMatch($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RobotsMatch =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "robots_match"
-}
-
-/** `count_substrs(str, array('g1', 'g2', …))`: per-gram OVERLAPPING
-  * occurrence counts in ONE scan (see [[TextKernels.countSubstrs]]) —
-  * the codegen replacement for the explode-every-position → InSet →
-  * broadcast-join → double-aggregate n-gram profile-matching pipeline
-  * (langIdNgram's original shape): when the gram table is a plan-time
-  * constant, profile matching is a per-row kernel, zero shuffles.
-  * Matching is char-substring based; counts equal the
-  * position-window form for grams whose char length equals their
-  * codepoint length (callers with window semantics must require BMP
-  * grams — langIdNgram does). Returns `array<bigint>` in gram order. */
-case class CountSubstrs(child: Expression, grams: Seq[String])
-    extends UnaryExpression {
-
-  // Seq, not Array (ADVICE r18): Array's reference equals/hashCode made
-  // two structurally identical kernels never compare equal, defeating
-  // semantic-equality checks and common-subexpression elimination when
-  // the kernel appears twice in a plan. The kernel call converts once.
-  private lazy val gramsArr: Array[String] = grams.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"count_substrs requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.countSubstrs(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], gramsArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gref = ctx.addReferenceObj("countSubstrsGrams", gramsArr,
-      "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.countSubstrs($c, $gref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CountSubstrs =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_substrs"
-}
-
-/** `tokenize_mixed(str)`: script-aware whitespace tokenizer (see
-  * [[TextKernels.tokenizeMixedCore]]) — the shared word-extraction
-  * path behind [[graft.functions.TextFunctions.tokenize]]. Splits on
-  * `[ \t\n\f\r]+` with split()'s exact empty-token semantics, then
-  * routes no-space-script runs (CJK Han/kana, Thai, Lao, Myanmar,
-  * Khmer — [[TextKernels.noSpaceRanges]]) to overlapping character
-  * bigrams so token statistics stop degenerating on zh/ja/th text.
-  * Bit-identical to `split(lower, ws)` on text without those
-  * codepoints — the lowercase is composed OUTSIDE (the caller wraps
-  * `lower()`), keeping Spark's own casing semantics. */
-case class TokenizeMixed(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"tokenize_mixed requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.tokenizeMixed(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.tokenizeMixed($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenizeMixed =
-    copy(child = newChild)
-
-  override def prettyName: String = "tokenize_mixed"
-}
-
-/** `count_rlike(arr, 'pattern')`: # array elements matching the regex
-  * literal (unanchored, Java regex — stay inside the Java/RE2-common
-  * subset when the count feeds a hashed output). */
-case class CountRlike(child: Expression, pattern: String)
-    extends UnaryExpression {
-
-  @transient private lazy val compiled: Pattern = Pattern.compile(pattern)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"count_rlike requires array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.countRlike(input.asInstanceOf[ArrayData], compiled)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val patRef = ctx.addReferenceObj("countRlikePattern", compiled,
-      classOf[Pattern].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$.countRlike($c, $patRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CountRlike =
-    copy(child = newChild)
-
-  override def prettyName: String = "count_rlike"
 }

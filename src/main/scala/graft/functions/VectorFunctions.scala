@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   /** Quantize a float/double vector to int64 (1e-6 resolution) through
-    * the native [[QuantizeVec]] expression (one primitive loop; the
+    * the native `vec_quantize` kernel (one primitive loop; the
     * `transform` lambda form evaluates interpreted per element —
     * [[quantizeHof]] keeps it for the parity spec). */
   def quantize(vec: Column, scale: Double = 1e6): Column =
@@ -26,7 +26,7 @@ object VectorFunctions {
     transform(vec, x => floor(x.cast("double") * lit(scale)).cast("long"))
 
   /** Exact int64 dot product of two quantized vectors — native
-    * [[DotLongs]] expression. */
+    * `dot_longs` kernel. */
   def dotExact(a: Column, b: Column): Column =
     call_function("dot_longs", a, b)
 
@@ -35,7 +35,7 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   /** Element-wise int64 difference of two quantized vectors — native
-    * [[SubLongs]] expression (the residual-IVF-PQ kernel
+    * `sub_longs` kernel (the residual-IVF-PQ kernel
     * `x − centroid(cell(x))`). */
   def subExact(a: Column, b: Column): Column =
     call_function("sub_longs", a, b)
@@ -45,7 +45,7 @@ object VectorFunctions {
     zip_with(a, b, (x, y) => x - y)
 
   /** Exact int64 squared L2 distance of two quantized vectors — native
-    * [[SqDistLongs]] expression (the k-means / IVF assignment kernel). */
+    * `sqdist_longs` kernel (the k-means / IVF assignment kernel). */
   def sqDistExact(a: Column, b: Column): Column =
     call_function("sqdist_longs", a, b)
 
@@ -54,13 +54,13 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (s, v) => s + v)
 
   /** Max absolute element of a quantized vector — native
-    * [[MaxAbsLongs]] expression (the SQ8 per-vector scale). */
+    * `maxabs_longs` kernel (the SQ8 per-vector scale). */
   def maxAbsExact(a: Column): Column =
     call_function("maxabs_longs", a)
 
   /** Exact int64 squared reconstruction error of symmetric 127-level
     * scalar quantization at the vector's own max-abs scale — native
-    * [[Sq8SqErrLongs]] expression. */
+    * `sq8_sqerr_longs` kernel. */
   def sq8SqErrExact(a: Column): Column =
     call_function("sq8_sqerr_longs", a)
 

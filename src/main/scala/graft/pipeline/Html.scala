@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * codegen keeps the whole chain in one WholeStageCodegen projection;
   * a `transform` lambda here would drop the stage to interpreted
   * evaluation, the q34/q66 20× trap) — plus the codegen'd
-  * [[graft.functions.DecodeHtmlRefs]] single-pass entity stage (a
+  * native `decode_html_refs` single-pass entity stage (a
   * regex alternative would cost one full-text pass per decodable
   * codepoint). Every regex uses RE2-compatible syntax (inline `(?is)`
   * flags, non-greedy `.*?`, explicit whitespace classes — never `\s`,

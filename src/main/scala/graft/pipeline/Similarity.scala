@@ -280,7 +280,7 @@ object Similarity {
     * no float rounding anywhere, so the report is engine-exact. The
     * informational RMSE (quantized units) pays one IEEE-exact
     * division + sqrt per row. Native single-pass kernels
-    * ([[graft.functions.MaxAbsLongs]], [[graft.functions.Sq8SqErrLongs]])
+    * (native `maxabs_longs`, `sq8_sqerr_longs`)
     * keep the scan inside whole-stage codegen; per-row expressions,
     * no shuffle at any corpus size. */
   def sq8Report(embs: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -876,7 +876,7 @@ object Similarity {
     * lowest codeword / corpus id.
     *
     * Scale shape: the corpus pays the [[assignCells]] pass (broadcast
-    * centroids) and ONE residual projection (native [[graft.functions.SubLongs]],
+    * centroids) and ONE residual projection (native `sub_longs`,
     * whole-stage codegen) feeding the subspace argmin HashAggregate —
     * codes and cell ids come out of the same relation, so unlike
     * [[ivfPqTopK]] there is no codes⋈cells id join at all. Probes and
@@ -996,7 +996,7 @@ object Similarity {
 
   /** Residual projection `(vid, cent_id, _rq = qv − centroid(cell))`
     * over a corpus: one [[assignCells]] pass plus one broadcast join,
-    * residual computed by the native [[graft.functions.SubLongs]]. */
+    * residual computed by the native `sub_longs`. */
   private def residualArrays(corpus: DataFrame, trained: DataFrame,
       idCol: String, vecCol: String): DataFrame =
     corpus

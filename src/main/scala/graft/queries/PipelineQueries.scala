@@ -2292,7 +2292,7 @@ object PipelineQueries {
     // charset front door AHEAD of extraction: pages arrive as raw
     // BYTES in four real-crawl encodings (plain / BOM'd UTF-8,
     // Latin-1/cp1252, BOM'd UTF-16LE — the reference's deserializer hardcodes
-    // UTF-8, JacksonScheme.java:30-38); decode_bytes normalizes all
+    // UTF-8, JacksonScheme.java:30-38); decode_page normalizes all
     // four to the SAME text, so every downstream stage and the oracle
     // are encoding-blind while the ledger keeps the detection label
     val bom8 = lit(Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
@@ -3253,8 +3253,8 @@ object PipelineQueries {
         "container_id", "warc", gzipped = true)))
   }
 
-  /** Charset front door ([[graft.functions.DetectCharset]] /
-    * [[graft.functions.DecodeBytes]]): raw fetched BYTES normalize to
+  /** Charset front door (`decode_page`,
+    * [[graft.functions.CharsetKernels]]): raw fetched BYTES normalize to
     * text before any extraction — BOM sniff, strict UTF-8 validation,
     * WHATWG windows-1252 fallback (the reference's deserializer
     * hardcodes UTF-8, `JacksonScheme.java:30-38`; a real crawl would
@@ -3340,7 +3340,7 @@ object PipelineQueries {
 
   /** No-space-script token statistics — the routing proof for the
     * script-aware shared tokenizer ([[TextFunctions.tokenize]] /
-    * [[graft.functions.TokenizeMixed]]): per-document token count,
+    * `tokenize_mixed`): per-document token count,
     * distinct count, no-space-token count, and summed token length
     * over the real corpus UNIONED with [[cjkPlant]]. Before the
     * fallback, a CJK/Thai document was ONE giant "token"

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Charset front door ([[CharsetKernels]], `detect_charset` /
-  * `decode_bytes`): BOM sniffing, the strict UTF-8 validator against
+/** Charset front door ([[CharsetKernels]], `decode_page`): BOM sniffing, the strict UTF-8 validator against
   * hand-built byte sequences (overlongs, surrogates, truncations), and
   * the WHATWG windows-1252 fallback — total, injective, smart-quote
   * range mapped per the encoding standard. */
@@ -68,14 +67,16 @@ class CharsetSpec extends AnyFunSuite {
       ("utf-8", Array.empty[Byte], ""))
     cases.zipWithIndex.foreach { case ((want, bytes, wantText), i) =>
       assert(CharsetKernels.charsetOf(bytes) == want, s"case $i label")
-      assert(CharsetKernels.decode(bytes).toString == wantText, s"case $i text")
+      val page = CharsetKernels.decodePage(bytes)
+      assert(page.getUTF8String(0).toString == want, s"case $i page label")
+      assert(page.getUTF8String(1).toString == wantText, s"case $i text")
     }
     // a CP1252 smart-quote page: 0x93/0x94 are curly quotes, 0x97 an
     // em dash — the mojibake class the WHATWG fallback exists to fix
     val smart = Array[Byte]('h', 'i', 0x93.toByte, 'q', 0x94.toByte,
       0x97.toByte, 'z')
     assert(CharsetKernels.charsetOf(smart) == "cp1252")
-    assert(CharsetKernels.decode(smart).toString ==
+    assert(CharsetKernels.decodePage(smart).getUTF8String(1).toString ==
       "hi“q”—z")
   }
 
@@ -86,42 +87,19 @@ class CharsetSpec extends AnyFunSuite {
       (2L, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ utf8("bom'd")),
       (3L, "café".getBytes(StandardCharsets.ISO_8859_1)),
       (4L, Array(0xFF, 0xFE).map(_.toByte) ++
-        "wide".getBytes(StandardCharsets.UTF_16LE)))
+        "wide".getBytes(StandardCharsets.UTF_16LE)),
+      (5L, Array(0xFE, 0xFF).map(_.toByte) ++
+        "wide".getBytes(StandardCharsets.UTF_16BE)))
+    val page = call_function("decode_page", col("raw"))
     val out = rows.toDF("id", "raw")
-      .select(col("id"), call_function("detect_charset", col("raw")).as("cs"),
-        call_function("decode_bytes", col("raw")).as("t"))
+      .select(col("id"), page.getField("charset").as("cs"),
+        page.getField("text").as("t"))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2))))
       .toMap
     assert(out(1L) == (("utf-8", "plain")))
     assert(out(2L) == (("utf-8-bom", "bom'd")))
     assert(out(3L) == (("cp1252", "café")))
     assert(out(4L) == (("utf-16le", "wide")))
-  }
-
-  test("decode_page resolves from SQL text via GraftExtensions; struct " +
-      "fields agree with the single-purpose expressions") {
-    // the combined one-scan form: a field reorder or registration
-    // regression must fail HERE, not as an oracle-red q237/q234
-    val rows = Seq(
-      (1L, utf8("plain")),
-      (2L, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ utf8("bom'd")),
-      (3L, "café".getBytes(StandardCharsets.ISO_8859_1)),
-      (4L, Array(0xFE, 0xFF).map(_.toByte) ++
-        "wide".getBytes(StandardCharsets.UTF_16BE)))
-    rows.toDF("id", "raw").createOrReplaceTempView("decode_page_fixture")
-    val out = spark.sql(
-      """SELECT id, decode_page(raw).charset AS cs,
-        |  decode_page(raw).text AS t,
-        |  detect_charset(raw) AS cs2, decode_bytes(raw) AS t2
-        |FROM decode_page_fixture""".stripMargin)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getString(1), r.getString(2), r.getString(3), r.getString(4))))
-      .toMap
-    spark.catalog.dropTempView("decode_page_fixture")
-    out.foreach { case (id, (cs, t, cs2, t2)) =>
-      assert(cs == cs2 && t == t2, s"struct fields diverged at id=$id")
-    }
-    assert(out(2L)._1 == "utf-8-bom" && out(2L)._2 == "bom'd")
-    assert(out(4L)._1 == "utf-16be" && out(4L)._2 == "wide")
+    assert(out(5L) == (("utf-16be", "wide")))
   }
 }

@@ -7,8 +7,8 @@ import graft.TestSpark
 
 /** Native vec_quantize / dot_longs / sqdist_longs: value parity with the
   * higher-order-function forms (the previous implementation), null and
-  * length-mismatch semantics, SQL-text availability, interpreted-vs-codegen
-  * agreement. */
+  * length-mismatch semantics, interpreted-vs-codegen agreement (each
+  * name's SQL-text availability is a [[KernelTableSpec]] row). */
 class VectorExpressionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -82,23 +82,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(edge(0).getAs[collection.Seq[java.lang.Long]]("s") ==
       Seq[java.lang.Long](-2L, null))
     assert(edge(1).isNullAt(1))
-    // SQL-text availability through GraftExtensions
-    Seq((Seq(5L, 1L), Seq(2L, 3L))).toDF("a", "b")
-      .createOrReplaceTempView("sub_in")
-    assert(spark.sql("SELECT sub_longs(a, b) AS s FROM sub_in")
-      .collect().head.getAs[collection.Seq[Long]]("s") == Seq(3L, -2L))
-  }
-
-  test("expressions resolve from SQL text via GraftExtensions") {
-    Seq((Seq(1.5f, -2.25f), Seq(2L, 3L), Seq(5L, 1L)))
-      .toDF("v", "a", "b").createOrReplaceTempView("vec_in")
-    val r = spark.sql(
-      """SELECT vec_quantize(v, 1000000.0) AS q, dot_longs(a, b) AS d,
-        |       sqdist_longs(a, b) AS s FROM vec_in""".stripMargin)
-      .collect().head
-    assert(r.getAs[collection.Seq[Long]]("q") == Seq(1500000L, -2250000L))
-    assert(r.getLong(1) == 2L * 5L + 3L * 1L)
-    assert(r.getLong(2) == 9L + 4L)
   }
 
   test("packDistId orders like struct(d, id); bitsFor covers the id domain") {

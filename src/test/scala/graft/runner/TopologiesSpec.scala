@@ -498,11 +498,7 @@ class TopologiesSpec extends AnyFunSuite {
     Seq("utf-8", "utf-8-bom", "cp1252", "utf-16le").foreach(c =>
       assert(want.exists(_.contains(c)), s"fixture never detects $c"))
 
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withRocksDb {
       // two different mid-stream splits (doc_id-ordered arrivals) must
       // both reproduce the batch verdicts exactly
       Seq(
@@ -631,11 +627,6 @@ class TopologiesSpec extends AnyFunSuite {
         assert(verdicts(3L) == "kept",
           "post-expiry re-arrival must be re-admitted (bounded-state mode)")
       }
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -674,11 +665,7 @@ class TopologiesSpec extends AnyFunSuite {
       rec("https://Example.COM:443/pa?utm_source=x", "200 OK", good) ++
       rec("https://example.com/pc", "200 OK", good)
 
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withRocksDb {
       val in = MemoryStream[(Long, Array[Byte])]
       val q = WebIngestStream.gate(
           WebIngestStream.fromWarc(in.toDF()
@@ -708,11 +695,6 @@ class TopologiesSpec extends AnyFunSuite {
       assert(byUrl("https://example.com/pb") == Seq("dropped_blocklist"))
       assert(byUrl("https://example.com/pc") == Seq("kept"))
       assert(!byUrl.keySet.exists(_.contains("gone")))
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

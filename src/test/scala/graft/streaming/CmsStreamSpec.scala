@@ -26,29 +26,19 @@ class CmsStreamSpec extends AnyFunSuite {
     val updates = Sketches.cmsHashed(items, "token")
       .collect().map(r => CmsStream.CounterUpdate(
         r.getLong(0), r.getLong(1), r.getLong(2)))
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[CmsStream.CounterUpdate]
-    val query = CmsStream.counters(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cms_stream")
-      .option("checkpointLocation", Files.createTempDirectory("cms_ckpt").toString)
-      .start()
-    try {
-      val shuffled = rnd.shuffle(updates.toVector)
-      stream.addData(shuffled.take(4000)); query.processAllAvailable()
-      stream.addData(shuffled.slice(4000, 15000)); query.processAllAvailable()
-      stream.addData(shuffled.drop(15000)); query.processAllAvailable()
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val stream = MemoryStream[CmsStream.CounterUpdate]
+      val query = CmsStream.counters(stream.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("cms_stream")
+        .option("checkpointLocation", Files.createTempDirectory("cms_ckpt").toString)
+        .start()
+      try {
+        val shuffled = rnd.shuffle(updates.toVector)
+        stream.addData(shuffled.take(4000)); query.processAllAvailable()
+        stream.addData(shuffled.slice(4000, 15000)); query.processAllAvailable()
+        stream.addData(shuffled.drop(15000)); query.processAllAvailable()
+      } finally query.stop()
     }
     val rows = spark.table("cms_stream")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -23,28 +23,18 @@ class DomainCapStreamSpec extends AnyFunSuite {
     val batch2 = Seq((11L, "a.com"), (13L, "a.com"), (14L, "a.com"),
       (21L, "b.org")).map((DomainCapStream.DocArrival.apply _).tupled)
 
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DomainCapStream.DocArrival]
-    val q = DomainCapStream.admissions(in.toDS(), cap = 3)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("domcap_stream")
-      .option("checkpointLocation",
-        Files.createTempDirectory("domcap_ckpt").toString)
-      .start()
-    try {
-      in.addData(batch1); q.processAllAvailable()
-      in.addData(batch2); q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val in = MemoryStream[DomainCapStream.DocArrival]
+      val q = DomainCapStream.admissions(in.toDS(), cap = 3)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("domcap_stream")
+        .option("checkpointLocation",
+          Files.createTempDirectory("domcap_ckpt").toString)
+        .start()
+      try {
+        in.addData(batch1); q.processAllAvailable()
+        in.addData(batch2); q.processAllAvailable()
+      } finally q.stop()
     }
     val got = spark.table("domcap_stream")
       .collect().map(r => (r.getLong(0),

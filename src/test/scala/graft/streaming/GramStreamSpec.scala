@@ -31,29 +31,19 @@ class GramStreamSpec extends AnyFunSuite {
     val vecs = data.map { case (_, e) =>
       GramStream.QuantVec("all", e.map(x => math.floor(x.toDouble * 1e6).toLong))
     }
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[GramStream.QuantVec]
-    val query = GramStream.running(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gram_stream")
-      .option("checkpointLocation", Files.createTempDirectory("gr_ckpt").toString)
-      .start()
-    try {
-      val shuffled = rnd.shuffle(vecs.toVector)
-      stream.addData(shuffled.take(80)); query.processAllAvailable()
-      stream.addData(shuffled.slice(80, 200)); query.processAllAvailable()
-      stream.addData(shuffled.drop(200)); query.processAllAvailable()
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val stream = MemoryStream[GramStream.QuantVec]
+      val query = GramStream.running(stream.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("gram_stream")
+        .option("checkpointLocation", Files.createTempDirectory("gr_ckpt").toString)
+        .start()
+      try {
+        val shuffled = rnd.shuffle(vecs.toVector)
+        stream.addData(shuffled.take(80)); query.processAllAvailable()
+        stream.addData(shuffled.slice(80, 200)); query.processAllAvailable()
+        stream.addData(shuffled.drop(200)); query.processAllAvailable()
+      } finally query.stop()
     }
     val rows = spark.table("gram_stream").collect()
       .map(r => (r.getInt(1), r.getInt(2)) ->
@@ -77,30 +67,22 @@ class GramStreamSpec extends AnyFunSuite {
     // the overflow guard fails the query instead of wrapping: provider
     // set BEFORE start so the failure can only be the require (its
     // message is asserted, not just any exception)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream2 = MemoryStream[GramStream.QuantVec]
-    val q2 = GramStream.running(stream2.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gram_stream_guard")
-      .option("checkpointLocation", Files.createTempDirectory("gr2_ckpt").toString)
-      .start()
-    try {
-      stream2.addData(Seq(GramStream.QuantVec("g", Seq(3000000000L, 0L))))
-      val e = intercept[Exception] { q2.processAllAvailable() }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains("risks int64 overflow")),
-        messages(e).mkString(" | "))
-    } finally {
-      q2.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val stream2 = MemoryStream[GramStream.QuantVec]
+      val q2 = GramStream.running(stream2.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("gram_stream_guard")
+        .option("checkpointLocation", Files.createTempDirectory("gr2_ckpt").toString)
+        .start()
+      try {
+        stream2.addData(Seq(GramStream.QuantVec("g", Seq(3000000000L, 0L))))
+        val e = intercept[Exception] { q2.processAllAvailable() }
+        def messages(t: Throwable): Seq[String] =
+          if (t == null) Nil
+          else Option(t.getMessage).toSeq ++ messages(t.getCause)
+        assert(messages(e).exists(_.contains("risks int64 overflow")),
+          messages(e).mkString(" | "))
+      } finally q2.stop()
     }
   }
 }

@@ -28,30 +28,20 @@ class HllStreamSpec extends AnyFunSuite {
     val hashed = Sketches.hllHashed(items, "g", "item")
       .collect().map(r => HllStream.HashedItem(
         r.getString(0), r.getLong(1), r.getLong(2)))
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[HllStream.HashedItem]
-    val query = HllStream.estimates(stream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("hll_stream")
-      .option("checkpointLocation", Files.createTempDirectory("hll_ckpt").toString)
-      .start()
-    try {
-      // three uneven micro-batches in a scrambled order
-      val shuffled = rnd.shuffle(hashed.toVector)
-      stream.addData(shuffled.take(500)); query.processAllAvailable()
-      stream.addData(shuffled.slice(500, 2100)); query.processAllAvailable()
-      stream.addData(shuffled.drop(2100)); query.processAllAvailable()
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val stream = MemoryStream[HllStream.HashedItem]
+      val query = HllStream.estimates(stream.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("hll_stream")
+        .option("checkpointLocation", Files.createTempDirectory("hll_ckpt").toString)
+        .start()
+      try {
+        // three uneven micro-batches in a scrambled order
+        val shuffled = rnd.shuffle(hashed.toVector)
+        stream.addData(shuffled.take(500)); query.processAllAvailable()
+        stream.addData(shuffled.slice(500, 2100)); query.processAllAvailable()
+        stream.addData(shuffled.drop(2100)); query.processAllAvailable()
+      } finally query.stop()
     }
     val rows = spark.table("hll_stream")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),

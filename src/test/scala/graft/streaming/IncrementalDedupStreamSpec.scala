@@ -54,37 +54,27 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
       .map(r => NearDupStream.BandRow(r.getLong(0), r.getInt(1), r.getString(2)))
       .sortBy(_.doc_id)
 
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val hashStream = MemoryStream[IncrementalDedupStream.HashedDoc]
-    val bandStream = MemoryStream[NearDupStream.BandRow]
-    val hashQ = IncrementalDedupStream.exactDups(hashStream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("incdedup_exact")
-      .option("checkpointLocation", Files.createTempDirectory("ide_ckpt").toString)
-      .start()
-    val bandQ = NearDupStream.candidates(bandStream.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("incdedup_bands")
-      .option("checkpointLocation", Files.createTempDirectory("idb_ckpt").toString)
-      .start()
-    try {
-      hashStream.addData(hashed.filter(h => oldIds(h.doc_id)))
-      bandStream.addData(banded.filter(b => oldIds(b.doc_id)))
-      hashQ.processAllAvailable(); bandQ.processAllAvailable()
-      hashStream.addData(hashed.filter(h => newIds(h.doc_id)))
-      bandStream.addData(banded.filter(b => newIds(b.doc_id)))
-      hashQ.processAllAvailable(); bandQ.processAllAvailable()
-    } finally {
-      hashQ.stop(); bandQ.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.TestSpark.withRocksDb {
+      val hashStream = MemoryStream[IncrementalDedupStream.HashedDoc]
+      val bandStream = MemoryStream[NearDupStream.BandRow]
+      val hashQ = IncrementalDedupStream.exactDups(hashStream.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("incdedup_exact")
+        .option("checkpointLocation", Files.createTempDirectory("ide_ckpt").toString)
+        .start()
+      val bandQ = NearDupStream.candidates(bandStream.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName("incdedup_bands")
+        .option("checkpointLocation", Files.createTempDirectory("idb_ckpt").toString)
+        .start()
+      try {
+        hashStream.addData(hashed.filter(h => oldIds(h.doc_id)))
+        bandStream.addData(banded.filter(b => oldIds(b.doc_id)))
+        hashQ.processAllAvailable(); bandQ.processAllAvailable()
+        hashStream.addData(hashed.filter(h => newIds(h.doc_id)))
+        bandStream.addData(banded.filter(b => newIds(b.doc_id)))
+        hashQ.processAllAvailable(); bandQ.processAllAvailable()
+      } finally { hashQ.stop(); bandQ.stop() }
     }
 
     // exact arm: new doc whose canonical first-seen is an OLD doc
@@ -116,22 +106,18 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     // batch 1's canonicals — state recovered from RocksDB, not rebuilt
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("restart_ckpt").toString
     val outDir = Files.createTempDirectory("restart_out").toString
-    val stream = MemoryStream[IncrementalDedupStream.HashedDoc]
-    // parquet sink: the memory sink refuses checkpoint recovery, and a
-    // real deployment's file/Kafka sink is exactly what W6's
-    // at-least-once-with-checkpoint claim is about
-    def start() = IncrementalDedupStream.exactDups(stream.toDS())
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
+    graft.TestSpark.withRocksDb {
+      val stream = MemoryStream[IncrementalDedupStream.HashedDoc]
+      // parquet sink: the memory sink refuses checkpoint recovery, and a
+      // real deployment's file/Kafka sink is exactly what W6's
+      // at-least-once-with-checkpoint claim is about
+      def start() = IncrementalDedupStream.exactDups(stream.toDS())
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .start()
       val q1 = start()
       stream.addData(Seq(
         IncrementalDedupStream.HashedDoc(1L, "h1"),
@@ -144,13 +130,6 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
         IncrementalDedupStream.HashedDoc(4L, "h3")))
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val events = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -164,19 +143,15 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     // a FULL query restart — ListState recovered, not rebuilt
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("nd_restart_ckpt").toString
     val outDir = Files.createTempDirectory("nd_restart_out").toString
-    val stream = MemoryStream[NearDupStream.BandRow]
-    def start() = NearDupStream.candidates(stream.toDS())
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
+    graft.TestSpark.withRocksDb {
+      val stream = MemoryStream[NearDupStream.BandRow]
+      def start() = NearDupStream.candidates(stream.toDS())
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .start()
       val q1 = start()
       stream.addData(Seq(NearDupStream.BandRow(1L, 0, "b"),
         NearDupStream.BandRow(2L, 0, "b")))
@@ -186,13 +161,6 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
       stream.addData(Seq(NearDupStream.BandRow(3L, 0, "b")))
       q2.processAllAvailable()
       q2.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val pairs = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -216,16 +184,12 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     assert(batchWant == Set((1L, 2L), (1L, 3L), (2L, 3L)),
       "hot bucket must be fully excluded by the batch guard")
 
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // two different batch splits: overflow lands mid-bucket in one and
-    // on a later batch in the other — the net set must not care
-    val splits = Seq(
-      Seq(rows.filter(_.doc_id <= 11), rows.filter(_.doc_id > 11)),
-      Seq(rows.take(3), rows.slice(3, 9), rows.drop(9)))
-    try {
+    graft.TestSpark.withRocksDb {
+      // two different batch splits: overflow lands mid-bucket in one and
+      // on a later batch in the other — the net set must not care
+      val splits = Seq(
+        Seq(rows.filter(_.doc_id <= 11), rows.filter(_.doc_id > 11)),
+        Seq(rows.take(3), rows.slice(3, 9), rows.drop(9)))
       splits.zipWithIndex.foreach { case (batches, i) =>
         val stream = MemoryStream[NearDupStream.BandRow]
         val q = NearDupStream.candidates(stream.toDS(), maxBucket = cap)
@@ -249,15 +213,6 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
         // retraction must have been exercised
         if (i == 0) assert(tombs.nonEmpty, "overflow must emit retractions")
         assert(net == batchWant, s"split $i")
-      }
-    } finally {
-      // restore in a finally: a failed assert must not leak the RocksDB
-      // provider into later suites sharing the session
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
   }
