@@ -22,16 +22,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (children: Seq[Expression]) => {
           // checked first, so a wrong count fails with the kernel's usage
           require(children.length == k.arity, k.arityMessage(children.length))
-          (k.literal, children) match {
-            case (Some(l), Seq(child, arg)) =>
+          // a literal row takes one column and the literal (KernelTableSpec
+          // pins the shapes), so the arity check fixes the positions
+          k.literal match {
+            case Some(l) =>
               // a plan-time constant, prepared once per call, not per row
+              val arg = children.last
               require(arg.foldable, s"${k.name} ${l.param} must be a literal")
               val v = l.read.applyOrElse(arg.eval(), (other: Any) =>
                 throw new IllegalArgumentException(
                   s"${k.name} ${l.param} must be ${l.kind}, got $other"))
-              UnaryKernelCall(k.name, child, Some(v))
-            case (None, Seq(child)) => UnaryKernelCall(k.name, child)
-            case (None, Seq(left, right)) => BinaryKernelCall(k.name, left, right)
+              UnaryKernelCall(k.name, children.head, Some(v))
+            case None if k.inputs.length == 2 =>
+              BinaryKernelCall(k.name, children.head, children.last)
+            case None => UnaryKernelCall(k.name, children.head)
           }
         }))
     }

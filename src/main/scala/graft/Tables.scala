@@ -116,6 +116,11 @@ object Tables {
       // conf: CodeGenerator sizes its cache once, at first use, so it is
       // set on the builder (`spark.conf.set` rejects it).
       .config("spark.sql.codegen.cache.maxEntries", "500")
+      // Streaming operator state lives in RocksDB: `transformWithState`
+      // (graft.streaming.ValueFold and the processors beside it) runs on
+      // no other store, and every other stateful operator uses it too.
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.streaming.ValueFold
 
 /** Event-time as-of join — the temporal lookup Spark has no native
   * operator for: for each left row, attach the most recent right row
@@ -92,24 +93,21 @@ object AsOfJoin {
     * monotonicity, same trade as [[Funnel.funnelStreaming]]). */
   def asOfStreaming(events: Dataset[AsOfEvent]): Dataset[AsOfMatch] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[AsOfState, AsOfMatch](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, it: Iterator[AsOfEvent], state) =>
-          var latest = state.getOption
-          val out = List.newBuilder[AsOfMatch]
-          it.toSeq.sortBy(e => (e.ts_us, e.side, e.id)).foreach { e =>
-            if (e.side == 0) {
-              if (latest.forall(s => e.ts_us > s.rightTs ||
-                  (e.ts_us == s.rightTs && e.id >= s.rightId)))
-                latest = Some(AsOfState(e.ts_us, e.id))
-            } else {
-              out += AsOfMatch(key, e.id, e.ts_us,
-                latest.map(_.rightId), latest.map(_.rightTs))
-            }
+    ValueFold(events.groupByKey(_.key)) {
+      (key, it, prior: Option[AsOfState]) =>
+        var latest = prior
+        val out = List.newBuilder[AsOfMatch]
+        it.toSeq.sortBy(e => (e.ts_us, e.side, e.id)).foreach { e =>
+          if (e.side == 0) {
+            if (latest.forall(s => e.ts_us > s.rightTs ||
+                (e.ts_us == s.rightTs && e.id >= s.rightId)))
+              latest = Some(AsOfState(e.ts_us, e.id))
+          } else {
+            out += AsOfMatch(key, e.id, e.ts_us,
+              latest.map(_.rightId), latest.map(_.rightTs))
           }
-          latest.foreach(state.update)
-          out.result().iterator
-      }
+        }
+        (latest, out.result().iterator)
+    }
   }
 }

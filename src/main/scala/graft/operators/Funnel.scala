@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.streaming.ValueFold
 
 /** Ordered-funnel analysis — the sequential-pattern operator of product
   * analytics (signup → click → purchase conversion): step i is reached
@@ -75,32 +76,30 @@ object Funnel {
       maxGapUs: Long): Dataset[FunnelAdvance] = {
     require(steps.nonEmpty, "funnelStreaming: at least one step")
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelAdvance](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[FunnelEvent], state) =>
-          var reached = state.getOption.map(_.reached).getOrElse(Nil)
-          val out = List.newBuilder[FunnelAdvance]
-          // ties at one ts process in STEP order (non-step events last),
-          // so an equal-ts next-step event still advances — the same
-          // inclusive bound the batch form's (ts, side) window order has
-          def stepIdx(t: String) = { val i = steps.indexOf(t)
-            if (i < 0) Int.MaxValue else i }
-          it.toSeq.sortBy(e => (e.ts_us, stepIdx(e.event_type))).foreach { e =>
-            val next = reached.length
-            if (next < steps.length && e.event_type == steps(next)) {
-              val eligible =
-                if (next == 0) true
-                else e.ts_us >= reached.head &&
-                  e.ts_us <= reached.head + maxGapUs
-              if (eligible) {
-                reached = e.ts_us :: reached
-                out += FunnelAdvance(user, next, e.ts_us)
-              }
+    ValueFold(events.groupByKey(_.user_id)) {
+      (user, it, prior: Option[FunnelState]) =>
+        var reached = prior.map(_.reached).getOrElse(Nil)
+        val out = List.newBuilder[FunnelAdvance]
+        // ties at one ts process in STEP order (non-step events last),
+        // so an equal-ts next-step event still advances — the same
+        // inclusive bound the batch form's (ts, side) window order has
+        def stepIdx(t: String) = { val i = steps.indexOf(t)
+          if (i < 0) Int.MaxValue else i }
+        it.toSeq.sortBy(e => (e.ts_us, stepIdx(e.event_type))).foreach { e =>
+          val next = reached.length
+          if (next < steps.length && e.event_type == steps(next)) {
+            val eligible =
+              if (next == 0) true
+              else e.ts_us >= reached.head &&
+                e.ts_us <= reached.head + maxGapUs
+            if (eligible) {
+              reached = e.ts_us :: reached
+              out += FunnelAdvance(user, next, e.ts_us)
             }
           }
-          if (reached.nonEmpty) state.update(FunnelState(reached))
-          out.result().iterator
-      }
+        }
+        (Option.when(reached.nonEmpty)(FunnelState(reached)),
+          out.result().iterator)
+    }
   }
 }

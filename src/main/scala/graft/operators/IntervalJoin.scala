@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.streaming.ValueFold
 
 /** Interval-overlap aggregation — the range-join shape Spark has no
   * native operator for: per interval [start, end] (inclusive), the
@@ -146,29 +147,27 @@ object IntervalJoin {
       windowUs: Long): Dataset[WindowCount] = {
     require(windowUs >= 0, "attributionStreaming: windowUs must be >= 0")
     import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[WinState, WindowCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, it: Iterator[PointEvent], state) =>
-          var buf = state.getOption.map(_.tss).getOrElse(Vector.empty)
-          var maxSeen = if (buf.nonEmpty) buf.last else Long.MinValue
-          val out = List.newBuilder[WindowCount]
-          it.toSeq.sortBy(e => (e.ts_us, e.probe, e.id)).foreach { e =>
-            if (!e.probe) {
-              buf :+= e.ts_us
-              if (e.ts_us > maxSeen) maxSeen = e.ts_us
-            } else {
-              val lo = e.ts_us - windowUs
-              out += WindowCount(key, e.id, e.ts_us,
-                buf.count(t => t >= lo && t <= e.ts_us).toLong)
-              if (e.ts_us > maxSeen) maxSeen = e.ts_us // probes advance pruning too
-            }
+    ValueFold(events.groupByKey(_.key)) {
+      (key, it, prior: Option[WinState]) =>
+        var buf = prior.map(_.tss).getOrElse(Vector.empty)
+        var maxSeen = if (buf.nonEmpty) buf.last else Long.MinValue
+        val out = List.newBuilder[WindowCount]
+        it.toSeq.sortBy(e => (e.ts_us, e.probe, e.id)).foreach { e =>
+          if (!e.probe) {
+            buf :+= e.ts_us
+            if (e.ts_us > maxSeen) maxSeen = e.ts_us
+          } else {
+            val lo = e.ts_us - windowUs
+            out += WindowCount(key, e.id, e.ts_us,
+              buf.count(t => t >= lo && t <= e.ts_us).toLong)
+            if (e.ts_us > maxSeen) maxSeen = e.ts_us // probes advance pruning too
           }
-          // prune: entries below every future probe's window (arrivals
-          // in event-time order ⇒ future probes have ts >= maxSeen)
-          val keep = buf.filter(_ >= maxSeen - windowUs)
-          if (keep.nonEmpty) state.update(WinState(keep)) else state.remove()
-          out.result().iterator
-      }
+        }
+        // prune: entries below every future probe's window (arrivals
+        // in event-time order ⇒ future probes have ts >= maxSeen); an
+        // emptied buffer clears the key
+        val keep = buf.filter(_ >= maxSeen - windowUs)
+        (Option.when(keep.nonEmpty)(WinState(keep)), out.result().iterator)
+    }
   }
 }

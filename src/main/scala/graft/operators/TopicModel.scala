@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.functions.TextFunctions
+import graft.streaming.ValueFold
 import graft.telemetry.Events
 
 /** Location topic-model pipeline (locationTopicModelTopology):
@@ -647,18 +647,16 @@ object TopicModel {
   def countBatchesStreaming(ids: Dataset[Long],
       batchSize: Int = 5): Dataset[CountBatchAssign] = {
     import ids.sparkSession.implicits._
-    ids.groupByKey(_ => "all")
-      .flatMapGroupsWithState[CountBatchState, CountBatchAssign](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, it: Iterator[Long], state) =>
-          val st = state.getOption.getOrElse(CountBatchState(0L, Nil))
-          val all = st.buffer ::: it.toList.sorted
-          val nFull = all.size / batchSize
-          val (fire, keep) = all.splitAt(nFull * batchSize)
-          state.update(CountBatchState(st.nextBatchId + nFull, keep))
+    ValueFold(ids.groupByKey(_ => "all")) {
+      (_, it, prior: Option[CountBatchState]) =>
+        val st = prior.getOrElse(CountBatchState(0L, Nil))
+        val all = st.buffer ::: it.toList.sorted
+        val nFull = all.size / batchSize
+        val (fire, keep) = all.splitAt(nFull * batchSize)
+        (Some(CountBatchState(st.nextBatchId + nFull, keep)),
           fire.iterator.zipWithIndex.map { case (id, i) =>
             CountBatchAssign(id, st.nextBatchId + i / batchSize)
-          }
-      }
+          })
+    }
   }
 }

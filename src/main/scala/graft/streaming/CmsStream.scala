@@ -1,13 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming count-min sketch — the continuous-ingest face of
   * [[graft.pipeline.Sketches.cmsCounters]]: hashed occurrence updates
   * (the [[graft.pipeline.Sketches.cmsHashed]] (r, bucket, w) shape,
-  * computed batch-side per micro-batch) stream in, and a RocksDB-backed
-  * `ValueState` per (r, bucket) key accumulates the counter. A CMS
+  * computed batch-side per micro-batch) stream in, and a [[ValueFold]]
+  * value per (r, bucket) key accumulates the counter. A CMS
   * counter is an order-independent SUM, so the streamed matrix is
   * BIT-IDENTICAL to the batch sketch over the same occurrences — any
   * arrival order, any batch boundaries (CmsStreamSpec pins every
@@ -23,32 +22,16 @@ object CmsStream {
   case class CounterValue(r: Long, bucket: Long, counter: Long, gen: Long)
   case class CounterState(counter: Long, gen: Long)
 
-  class CmsProcessor
-      extends StatefulProcessor[(Long, Long), CounterUpdate, CounterValue] {
-    @transient private var state: ValueState[CounterState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[CounterState]("counter",
-        Encoders.product[CounterState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, Long),
-        rows: Iterator[CounterUpdate],
-        timers: TimerValues): Iterator[CounterValue] = {
-      val prior = if (state.exists()) state.get() else CounterState(0L, 0L)
-      var add = 0L
-      rows.foreach(u => add += u.w)
-      val next = CounterState(prior.counter + add, prior.gen + 1)
-      state.update(next)
-      Iterator.single(CounterValue(key._1, key._2, next.counter, next.gen))
-    }
-  }
-
   /** Hashed updates → counter values, append-mode (latest gen per
-    * (r, bucket) supersedes). Requires the RocksDB state store. */
+    * (r, bucket) supersedes). */
   def counters(updates: Dataset[CounterUpdate]): Dataset[CounterValue] = {
     import updates.sparkSession.implicits._
-    updates.groupByKey(u => (u.r, u.bucket))
-      .transformWithState(new CmsProcessor,
-        TimeMode.None(), OutputMode.Append())
+    ValueFold(updates.groupByKey(u => (u.r, u.bucket))) {
+      (key, rows, state: Option[CounterState]) =>
+        val prior = state.getOrElse(CounterState(0L, 0L))
+        val next = CounterState(prior.counter + rows.map(_.w).sum, prior.gen + 1)
+        (Some(next),
+          Iterator.single(CounterValue(key._1, key._2, next.counter, next.gen)))
+    }
   }
 }

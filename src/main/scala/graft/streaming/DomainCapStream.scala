@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming per-domain document caps — the ingest-time face of
   * [[graft.pipeline.Domains.capPerDomain]]: documents arrive
@@ -29,45 +28,30 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * was considered and rejected — it turns O(|domains|) state into
   * O(|docs|), which is the cost the cap gate exists to avoid.
   *
-  * State per domain: ONE counter (`ValueState[Long]`) — O(|domains|)
-  * total, the smallest state any cap gate can hold; RocksDB-backed via
-  * `transformWithState`. Every arrival is emitted with its admission
-  * verdict (the audit-ledger discipline of the batch form). */
+  * State per domain: ONE counter (a [[ValueFold]] `Long`) — O(|domains|)
+  * total, the smallest state any cap gate can hold. Every arrival is
+  * emitted with its admission verdict (the audit-ledger discipline of
+  * the batch form). */
 object DomainCapStream {
 
   case class DocArrival(doc_id: Long, domain: String)
   case class Admission(doc_id: Long, domain: String, pick_order: Long,
     admitted: Boolean)
 
-  class CapProcessor(cap: Int)
-      extends StatefulProcessor[String, DocArrival, Admission] {
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("admitted",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DocArrival],
-        timers: TimerValues): Iterator[Admission] = {
-      val n0 = if (count.exists()) count.get() else 0L
-      // deterministic within-batch order: doc_id ascending
-      val fresh = rows.map(_.doc_id).toVector.distinct.sorted
-      count.update(n0 + fresh.length)
-      fresh.iterator.zipWithIndex.map { case (d, i) =>
-        val order = n0 + i + 1
-        Admission(d, key, order, order <= cap)
-      }
-    }
-  }
-
-  /** Arrivals → admission ledger, append-mode. Requires the RocksDB
-    * state store provider (the `transformWithState` backend). */
+  /** Arrivals → admission ledger, append-mode. */
   def admissions(docs: Dataset[DocArrival],
       cap: Int): Dataset[Admission] = {
     require(cap >= 1, "admissions: cap must be >= 1")
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.domain)
-      .transformWithState(new CapProcessor(cap),
-        TimeMode.None(), OutputMode.Append())
+    ValueFold(docs.groupByKey(_.domain)) {
+      (key, rows, count: Option[Long]) =>
+        val n0 = count.getOrElse(0L)
+        // deterministic within-batch order: doc_id ascending
+        val fresh = rows.map(_.doc_id).toVector.distinct.sorted
+        (Some(n0 + fresh.length), fresh.iterator.zipWithIndex.map { case (d, i) =>
+          val order = n0 + i + 1
+          Admission(d, key, order, order <= cap)
+        })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming scene-change detection — the arrival-time twin of
   * [[graft.pipeline.Multimodal.frameDiffs]] for a live video-ingest
@@ -30,29 +29,26 @@ object FrameDiffStream {
 
   def frameDiffs(frames: Dataset[FrameRow]): Dataset[FrameDiffOut] = {
     import frames.sparkSession.implicits._
-    frames.groupByKey(_.media_id)
-      .flatMapGroupsWithState[LastFrame, FrameDiffOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (id: Long, it: Iterator[FrameRow], state) =>
-          var last = state.getOption
-          val out = List.newBuilder[FrameDiffOut]
-          it.toSeq.sortBy(_.frame_no).foreach { f =>
-            last.foreach { lf =>
-              if (f.frame_no == lf.frameNo + 1 &&
-                  f.gray.length == lf.gray.length) {
-                var d = 0L
-                var i = 0
-                while (i < f.gray.length) {
-                  d += math.abs(f.gray(i) - lf.gray(i)); i += 1
-                }
-                out += FrameDiffOut(id, f.frame_no, f.width, f.height, d,
-                  2L * d >= 255L * f.width * f.height)
+    ValueFold(frames.groupByKey(_.media_id)) {
+      (id, it, prior: Option[LastFrame]) =>
+        var last = prior
+        val out = List.newBuilder[FrameDiffOut]
+        it.toSeq.sortBy(_.frame_no).foreach { f =>
+          last.foreach { lf =>
+            if (f.frame_no == lf.frameNo + 1 &&
+                f.gray.length == lf.gray.length) {
+              var d = 0L
+              var i = 0
+              while (i < f.gray.length) {
+                d += math.abs(f.gray(i) - lf.gray(i)); i += 1
               }
+              out += FrameDiffOut(id, f.frame_no, f.width, f.height, d,
+                2L * d >= 255L * f.width * f.height)
             }
-            last = Some(LastFrame(f.frame_no, f.gray))
           }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+          last = Some(LastFrame(f.frame_no, f.gray))
+        }
+        (last, out.result().iterator)
+    }
   }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming HyperLogLog — the continuous-ingest face of
   * [[graft.pipeline.Sketches.hllDistinct]]: hashed items (the shared
   * [[graft.pipeline.Sketches.hllHashed]] (group, bucket, rho) shape,
-  * computed batch-side per micro-batch) stream in, a RocksDB-backed
-  * `ValueState` holds the m registers per group, and every micro-batch
+  * computed batch-side per micro-batch) stream in, a [[ValueFold]]
+  * value holds the m registers per group, and every micro-batch
   * that touches a group emits a fresh estimate with a generation
   * counter (the TrendingTopKStream downstream-upsert contract).
   *
@@ -51,38 +50,23 @@ object HllStream {
     (zeros, rMax, rounded)
   }
 
-  class HllProcessor(m: Int, alphaNum: Double)
-      extends StatefulProcessor[String, HashedItem, HllEstimate] {
-    @transient private var state: ValueState[Regs] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Regs]("regs",
-        Encoders.product[Regs], TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[HashedItem], timers: TimerValues): Iterator[HllEstimate] = {
-      val existing = if (state.exists()) Some(state.get()) else None
-      val prior = existing.map(_.v.toArray).getOrElse(new Array[Long](m))
-      val gen = existing.map(_.gen).getOrElse(0L) + 1
-      rows.foreach { r =>
-        val b = r.bucket.toInt
-        if (r.rho > prior(b)) prior(b) = r.rho
-      }
-      state.update(Regs(prior.toSeq, gen))
-      val (zeros, rMax, est) = estimate(prior, m, alphaNum)
-      Iterator.single(HllEstimate(key, m - zeros, zeros, rMax, est, gen))
-    }
-  }
-
   /** Hashed items → per-group estimates, update-style append (one row
-    * per touched group per micro-batch; the latest `gen` supersedes).
-    * Requires the RocksDB state store provider. */
+    * per touched group per micro-batch; the latest `gen` supersedes). */
   def estimates(items: Dataset[HashedItem], m: Int = 64,
       alphaNum: Double = 0.709): Dataset[HllEstimate] = {
     require(m >= 16, "estimates: m must be >= 16")
     import items.sparkSession.implicits._
-    items.groupByKey(_.group)
-      .transformWithState(new HllProcessor(m, alphaNum),
-        TimeMode.None(), OutputMode.Append())
+    ValueFold(items.groupByKey(_.group)) {
+      (key, rows, existing: Option[Regs]) =>
+        val regs = existing.map(_.v.toArray).getOrElse(new Array[Long](m))
+        val gen = existing.map(_.gen).getOrElse(0L) + 1
+        rows.foreach { r =>
+          val b = r.bucket.toInt
+          if (r.rho > regs(b)) regs(b) = r.rho
+        }
+        val (zeros, rMax, est) = estimate(regs, m, alphaNum)
+        (Some(Regs(regs.toSeq, gen)),
+          Iterator.single(HllEstimate(key, m - zeros, zeros, rMax, est, gen)))
+    }
   }
 }

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Streaming EXACT-dedup — the stateful arrival-time face of the exact
   * arm of [[graft.pipeline.Dedup.incrementalDedup]] (q88's daily-batch
   * shape run as a continuous ingest): documents stream in as
-  * (doc_id, text_hash) rows, a RocksDB-backed `ValueState` per hash
+  * (doc_id, text_hash) rows, a [[ValueFold]] value per hash
   * holds the FIRST doc id seen with that content, and every later
   * arrival of the same hash emits a `DupEvent(doc_id, dup_of = first)`.
   *
@@ -22,46 +21,28 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   *
   * Determinism: within a micro-batch, arrivals for a hash are processed
   * in doc-id order, so the smallest id becomes the canonical first —
-  * the same min-id representative rule as batch [[graft.pipeline.Dedup.exact]].
-  * `transformWithState` requires the RocksDB state store provider. */
+  * the same min-id representative rule as batch [[graft.pipeline.Dedup.exact]]. */
 object IncrementalDedupStream {
 
   case class HashedDoc(doc_id: Long, text_hash: String)
   case class DupEvent(doc_id: Long, dup_of: Long)
 
-  class HashProcessor
-      extends StatefulProcessor[String, HashedDoc, DupEvent] {
-    @transient private var first: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      first = getHandle.getValueState[Long]("first",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[HashedDoc], timers: TimerValues): Iterator[DupEvent] = {
-      val ids = rows.map(_.doc_id).toVector.distinct.sorted
-      val out = Vector.newBuilder[DupEvent]
-      var canonical: Option[Long] =
-        if (first.exists()) Some(first.get()) else None
-      ids.foreach { id =>
-        canonical match {
-          case None =>
-            canonical = Some(id)
-            first.update(id)
-          case Some(f) if id != f =>
-            out += DupEvent(id, f)
-          case _ => () // re-arrival of the canonical doc itself
-        }
-      }
-      out.result().iterator
-    }
-  }
-
   /** (doc_id, text_hash) rows → duplicate events, append-mode. */
   def exactDups(docs: Dataset[HashedDoc]): Dataset[DupEvent] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.text_hash)
-      .transformWithState(new HashProcessor,
-        TimeMode.None(), OutputMode.Append())
+    ValueFold(docs.groupByKey(_.text_hash)) {
+      (_, rows, first: Option[Long]) =>
+        val ids = rows.map(_.doc_id).toVector.distinct.sorted
+        val out = Vector.newBuilder[DupEvent]
+        var canonical = first
+        ids.foreach { id =>
+          canonical match {
+            case None => canonical = Some(id)
+            case Some(f) if id != f => out += DupEvent(id, f)
+            case _ => () // re-arrival of the canonical doc itself
+          }
+        }
+        (canonical, out.result().iterator)
+    }
   }
 }

@@ -100,8 +100,7 @@ object NearDupStream {
     }
   }
 
-  /** Banded rows → candidate pairs, append-mode. Requires the RocksDB
-    * state store provider (the `transformWithState` backend). */
+  /** Banded rows → candidate pairs, append-mode. */
   def candidates(bands: Dataset[BandRow],
       maxBucket: Int = Int.MaxValue): Dataset[CandPair] = {
     require(maxBucket >= 1, "candidates: maxBucket must be >= 1")

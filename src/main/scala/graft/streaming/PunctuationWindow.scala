@@ -21,6 +21,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Streaming: `flatMapGroupsWithState` with per-key state — the upgrade
   * over the reference is that state is keyed (parallel-safe, checkpointed)
   * where the bolt required parallelism 1 and lost state on restart (W6).
+  * It is the one `flatMapGroupsWithState` operator left beside the
+  * [[ValueFold]] streams. A port to their one-`ValueState` shape,
+  * measured over 5 alternating `role_stream` pairs (4 vCPU), dropped
+  * drain throughput from a median of 804 to 683 msgs/s (−15%), raised
+  * lag p50 from 3614 to 4099 ms and CPU per message from 4.1 to 4.8 ms —
+  * too close to the benchmark's 25% bound. The open window is due to
+  * become a `ValueState` start plus a `ListState` of events
+  * (O(micro-batch) state writes, not O(open window)); the fold moves to
+  * `transformWithState` once, with that change.
   * Batch: the same fold via `flatMapGroups` for backfill/oracle runs.
   *
   * Determinism note: the bolt processes in arrival order; under

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q109's event-rate anomaly detector
   * ([[graft.queries.CoreQueries.rateAnomalyOf]]): per-event-type hourly
   * counts scored against a trailing baseline of the last 6 OBSERVED
-  * windows, as O(1)-per-key `flatMapGroupsWithState` state (the current
+  * windows, as O(1)-per-key [[ValueFold]] state (the current
   * open hour plus a 6-deep count history — the same bounded-state
   * discipline as [[graft.operators.AsOfJoin.asOfStreaming]]).
   *
@@ -58,27 +57,24 @@ object RateAnomalyStream {
     * per event type. */
   def anomalies(events: Dataset[RateEvent]): Dataset[RateWindow] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[RateState, RateWindow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[RateEvent], state) =>
-          var st = state.getOption
-          val out = List.newBuilder[RateWindow]
-          it.toSeq.sortBy(_.ts_us).foreach { e =>
-            val h = e.ts_us - java.lang.Math.floorMod(e.ts_us, HourUs)
-            st match {
-              case None =>
-                st = Some(RateState(h, 1L, Nil))
-              case Some(s) if h == s.hourStart =>
-                st = Some(s.copy(count = s.count + 1))
-              case Some(s) if h > s.hourStart =>
-                out += scoreWindow(key, s.hourStart, s.count, s.history)
-                st = Some(RateState(h, 1L, (s.count :: s.history).take(6)))
-              case Some(_) => // late event into a closed hour: dropped
-            }
+    ValueFold(events.groupByKey(_.event_type)) {
+      (key, it, prior: Option[RateState]) =>
+        var st = prior
+        val out = List.newBuilder[RateWindow]
+        it.toSeq.sortBy(_.ts_us).foreach { e =>
+          val h = e.ts_us - java.lang.Math.floorMod(e.ts_us, HourUs)
+          st match {
+            case None =>
+              st = Some(RateState(h, 1L, Nil))
+            case Some(s) if h == s.hourStart =>
+              st = Some(s.copy(count = s.count + 1))
+            case Some(s) if h > s.hourStart =>
+              out += scoreWindow(key, s.hourStart, s.count, s.history)
+              st = Some(RateState(h, 1L, (s.count :: s.history).take(6)))
+            case Some(_) => // late event into a closed hour: dropped
           }
-          st.foreach(state.update)
-          out.result().iterator
-      }
+        }
+        (st, out.result().iterator)
+    }
   }
 }

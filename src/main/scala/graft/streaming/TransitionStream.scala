@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q184's Markov transition extraction
   * ([[graft.queries.CoreQueries.markovTransitionsOf]]): per-user
@@ -35,25 +34,22 @@ object TransitionStream {
     * (long, long, string) per user. */
   def transitions(events: Dataset[TransEvent]): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastSeen, Transition](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, it: Iterator[TransEvent], state) =>
-          var last = state.getOption
-          val out = List.newBuilder[Transition]
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            last match {
-              case Some(l) if e.ts_us > l.ts_us ||
-                  (e.ts_us == l.ts_us && e.event_id > l.event_id) =>
-                out += Transition(l.event_type, e.event_type)
-                last = Some(LastSeen(e.ts_us, e.event_id, e.event_type))
-              case Some(_) => // out-of-order across batches: dropped
-              case None =>
-                last = Some(LastSeen(e.ts_us, e.event_id, e.event_type))
-            }
+    ValueFold(events.groupByKey(_.user_id)) {
+      (_, it, prior: Option[LastSeen]) =>
+        var last = prior
+        val out = List.newBuilder[Transition]
+        it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+          last match {
+            case Some(l) if e.ts_us > l.ts_us ||
+                (e.ts_us == l.ts_us && e.event_id > l.event_id) =>
+              out += Transition(l.event_type, e.event_type)
+              last = Some(LastSeen(e.ts_us, e.event_id, e.event_type))
+            case Some(_) => // out-of-order across batches: dropped
+            case None =>
+              last = Some(LastSeen(e.ts_us, e.event_id, e.event_type))
           }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+        }
+        (last, out.result().iterator)
+    }
   }
 }

@@ -66,9 +66,7 @@ object TrendingTopKStream {
 
   /** (window, token) events → per-window running top-`k` leaderboards,
     * Update-mode (each emission supersedes the key's previous
-    * generation). Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`), the only
-    * backend `transformWithState` supports. */
+    * generation). */
   def topTokens(events: Dataset[TokenEvent], k: Int = 5): Dataset[TopKRow] = {
     require(k >= 1, "topTokens: k must be >= 1")
     import events.sparkSession.implicits._

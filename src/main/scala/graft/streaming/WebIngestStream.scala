@@ -37,10 +37,9 @@ import graft.pipeline.{Domains, Html, TextMetrics}
   * first-arrival slot — a fetch the origin forbids must not shadow a
   * future allowed snapshot.
   *
-  * State: one boolean per canonical URL + one counter per domain, both
-  * RocksDB-backed `transformWithState` (two keyed stateful stages
-  * CHAINED — never branched-and-unioned, which would instantiate the
-  * upstream state store once per branch).
+  * State: one boolean per canonical URL + one counter per domain (two
+  * keyed stateful stages CHAINED — never branched-and-unioned, which
+  * would instantiate the upstream state store once per branch).
   * PRECONDITION — doc-distinct stream (the [[DomainCapStream]] note):
   * at-least-once redelivery consumes quota and duplicates ledger rows. */
 object WebIngestStream {
@@ -169,32 +168,21 @@ object WebIngestStream {
   /** Per-domain cap over SURVIVORS: quota is charged only for pages
     * whose verdict0 is "pass" — earlier-gate drops ride through with
     * their verdicts unchanged (one ledger row per arrival either way).
-    * One counter per domain (the [[DomainCapStream.CapProcessor]]
-    * state shape). */
-  class DomainGateProcessor(cap: Int)
-      extends StatefulProcessor[String, FlaggedPage, PageVerdict] {
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("admitted",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[FlaggedPage],
-        timers: TimerValues): Iterator[PageVerdict] = {
-      var n = if (count.exists()) count.get() else 0L
-      val out = rows.toVector.sortBy(_.doc_id).map { p =>
-        val v =
-          if (p.verdict0 != "pass") p.verdict0
-          else {
-            n += 1
-            if (n <= cap) "kept" else "dropped_domain_cap"
-          }
-        PageVerdict(p.doc_id, p.charset, p.canon_url, p.domain,
-          p.n_lines, v)
-      }
-      count.update(n)
-      out.iterator
+    * One counter per domain (the [[DomainCapStream]] state shape). */
+  private def domainGate(cap: Int)(key: String, rows: Iterator[FlaggedPage],
+      count: Option[Long]): (Option[Long], Iterator[PageVerdict]) = {
+    var n = count.getOrElse(0L)
+    val out = rows.toVector.sortBy(_.doc_id).map { p =>
+      val v =
+        if (p.verdict0 != "pass") p.verdict0
+        else {
+          n += 1
+          if (n <= cap) "kept" else "dropped_domain_cap"
+        }
+      PageVerdict(p.doc_id, p.charset, p.canon_url, p.domain,
+        p.n_lines, v)
     }
+    (Some(n), out.iterator)
   }
 
   /** WARC containers → [[PageArrival]]s: the adapter that makes the
@@ -225,8 +213,7 @@ object WebIngestStream {
       .as[PageArrival]
   }
 
-  /** Arrivals → per-page admission ledger, append mode. Requires the
-    * RocksDB state store provider (`transformWithState`).
+  /** Arrivals → per-page admission ledger, append mode.
     *
     * `urlTtl`: None (default) = dedup-forever URL state (batch
     * parity); Some(d) = the BOUNDED-STATE mode — URL entries expire d
@@ -251,13 +238,11 @@ object WebIngestStream {
       case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
       case None => (TTLConfig.NONE, TimeMode.None())
     }
-    enrich(pages.toDF(), terms, phrases, suffixes, robotsRules)
+    val flagged = enrich(pages.toDF(), terms, phrases, suffixes, robotsRules)
       .as[EnrichedPage]
       .groupByKey(_.canon_url)
       .transformWithState(new UrlFirstProcessor(ttlConf),
         urlTimeMode, OutputMode.Append())
-      .groupByKey(_.domain)
-      .transformWithState(new DomainGateProcessor(cap),
-        TimeMode.None(), OutputMode.Append())
+    ValueFold(flagged.groupByKey(_.domain))(domainGate(cap))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 /** One shared local session for the whole (single-JVM, forked) test run —
   * same configs as Verify/Bench via [[Tables.session]]. */
@@ -19,9 +20,14 @@ object TestSpark {
     }
   }
 
-  /** Run `body` with streaming state in RocksDB, which the
-    * `transformWithState` streams require; start the queries inside. */
-  def withRocksDb[T](body: => T): T = withConf(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+  /** `df` as a non-local relation. The optimizer folds a projection over
+    * a local one (`Seq(...).toDF`) into it and evaluates it with an
+    * interpreted projection, so a fixture whose test must reach the
+    * generated code goes through here. */
+  def nonLocal(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Whether `df`'s executed plan runs a whole-stage-codegen stage. */
+  def usesCodegen(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan
+      .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined
 }

@@ -91,11 +91,12 @@ class CharsetSpec extends AnyFunSuite {
       (5L, Array(0xFE, 0xFF).map(_.toByte) ++
         "wide".getBytes(StandardCharsets.UTF_16BE)))
     val page = call_function("decode_page", col("raw"))
-    val out = rows.toDF("id", "raw")
+    val df = TestSpark.nonLocal(rows.toDF("id", "raw"))
       .select(col("id"), page.getField("charset").as("cs"),
         page.getField("text").as("t"))
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2))))
-      .toMap
+    val out = df.collect()
+      .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+    assert(TestSpark.usesCodegen(df))
     assert(out(1L) == (("utf-8", "plain")))
     assert(out(2L) == (("utf-8-bom", "bom'd")))
     assert(out(3L) == (("cp1252", "café")))

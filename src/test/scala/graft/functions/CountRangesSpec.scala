@@ -22,15 +22,16 @@ class CountRangesSpec extends AnyFunSuite {
     // mixed scripts, the q241 range table verbatim
     val spec = graft.pipeline.TextMetrics.ScriptRanges.map(_._2)
       .mkString(";")
-    val rows = Seq(
+    val rows = TestSpark.nonLocal(Seq(
       (1L, "hello мир 你好 مرحبا γειά 안녕 नमस्ते 123 !@#"),
       (2L, "Ångström Straße café ÷×"), // carved-out × ÷ stay uncounted
       (3L, ""),
       (4L, "ΑΒΓαβγ ЀЁӿ 一鿿 ؀ۿ 가힯"),
       (5L, "plain ascii words only"))
-      .toDF("id", "t")
-    val nat = rows.select(col("id"), native(col("t"), spec).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      .toDF("id", "t"))
+    val natDf = rows.select(col("id"), native(col("t"), spec).as("c"))
+    val nat = natDf.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(TestSpark.usesCodegen(natDf))
     val strip = graft.pipeline.TextMetrics.ScriptRanges.map { case (_, r) =>
       (length(col("t")) - length(regexp_replace(col("t"), s"[$r]", "")))
         .cast("long")

@@ -20,13 +20,15 @@ class CountRlikeSpec extends AnyFunSuite {
   test("native equals the filter-HOF form over random token arrays") {
     val rnd = new scala.util.Random(13)
     val pool = Seq("abc", "123", "a1", "", "...", "ZeBrA", "z", "99x")
-    val rows = Seq.tabulate(80)(i =>
+    val rows = TestSpark.nonLocal(Seq.tabulate(80)(i =>
       (i.toLong, Seq.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.length)))))
-      .toDF("id", "t")
+      .toDF("id", "t"))
     for (pat <- Seq("[a-z]", "[0-9]", "^a", "x$", "b.c")) {
-      val out = rows.select(native(col("t"), pat).as("nat"),
-        hof(col("t"), pat).as("hof")).collect()
-      out.foreach(r => assert(r.getLong(0) == r.getLong(1), s"pattern $pat"))
+      val df = rows.select(native(col("t"), pat).as("nat"),
+        hof(col("t"), pat).as("hof"))
+      df.collect().foreach(r =>
+        assert(r.getLong(0) == r.getLong(1), s"pattern $pat"))
+      assert(TestSpark.usesCodegen(df))
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -100,9 +99,7 @@ class KernelTableSpec extends AnyFunSuite {
       "count_rlike expects (array, pattern), got 0 arguments",
       "count_rlike(s, 'a')", "count_rlike requires array<string>, got string"))
 
-  // not a LocalRelation: a projection over one is folded into it and
-  // evaluated interpreted, whatever the codegen settings
-  private lazy val fixture = {
+  private lazy val fixture = TestSpark.nonLocal(
     Seq[(Long, Seq[String], Seq[java.lang.Float], Seq[java.lang.Long],
         Seq[java.lang.Long], String, Array[Byte], String, String)](
       (1L, Seq("running", null, "agreed"), Seq[java.lang.Float](1.5f, -2.25f),
@@ -113,9 +110,7 @@ class KernelTableSpec extends AnyFunSuite {
       (3L, Seq.empty[String], Seq[java.lang.Float](null, 0.5f),
         Seq[java.lang.Long](1L, null), Seq[java.lang.Long](1L), "",
         Array(0xFF, 0xFE, 0x77, 0x00).map(_.toByte), "/a$", "/a/"))
-      .toDF("id", "toks", "v", "a", "b", "s", "raw", "pat", "path")
-      .localCheckpoint()
-  }
+      .toDF("id", "toks", "v", "a", "b", "s", "raw", "pat", "path"))
 
   private def message(sql: String): String =
     intercept[Exception](spark.sql(s"SELECT $sql").collect()).getMessage
@@ -124,6 +119,14 @@ class KernelTableSpec extends AnyFunSuite {
     assert(Kernels.all.map(_.name).toSet == cases.keySet)
     cases.keys.foreach(n =>
       assert(spark.catalog.functionExists(n), s"$n is not registered"))
+  }
+
+  test("every row is one of the shapes the registration builds: one or " +
+      "two columns, or one column and a literal (binary in SQL)") {
+    Kernels.all.foreach { k =>
+      val shape = (k.inputs.length, k.literal.isDefined)
+      assert(Set((1, false), (2, false), (1, true))(shape), s"${k.name}: $shape")
+    }
   }
 
   for ((name, c) <- cases.toSeq.sortBy(_._1)) test(s"$name: resolves from " +
@@ -136,9 +139,7 @@ class KernelTableSpec extends AnyFunSuite {
     def run(): (Seq[Row], Boolean) = {
       val df = spark.sql(s"SELECT id, ${c.onFixture} AS k FROM kernel_fixture")
       val rows = df.collect().toSeq.sortBy(_.getLong(0))
-      val codegen = df.queryExecution.executedPlan
-        .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined
-      (rows, codegen)
+      (rows, TestSpark.usesCodegen(df))
     }
     val (interpreted, interpretedUsedCodegen) = TestSpark.withConf(
       "spark.sql.codegen.wholeStage" -> "false",

@@ -19,11 +19,11 @@ class StemTokensSpec extends AnyFunSuite {
     (4L, null.asInstanceOf[Seq[String]]))
 
   test("native expression equals the UDF form, including nulls and empties") {
-    val df = fixtures.toDF("id", "toks")
-    val both = df.select(col("id"),
+    val df = TestSpark.nonLocal(fixtures.toDF("id", "toks")).select(col("id"),
       TextFunctions.stemTokens(col("toks")).as("native"),
       TextFunctions.stemTokensUdfForm(col("toks")).as("viaUdf"))
-      .collect()
+    val both = df.collect()
+    assert(TestSpark.usesCodegen(df))
     both.foreach { r =>
       assert(r.getAs[collection.Seq[String]]("native") == r.getAs[collection.Seq[String]]("viaUdf"),
         s"id=${r.getLong(0)}")

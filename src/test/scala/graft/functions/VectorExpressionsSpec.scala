@@ -17,10 +17,11 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val vecs = Seq.tabulate(60)(i =>
       (i.toLong, Seq.fill(16)((rnd.nextFloat() - 0.5f) * 20f)))
-    val rows = vecs.toDF("id", "v").select(
+    val df = TestSpark.nonLocal(vecs.toDF("id", "v")).select(
       VectorFunctions.quantize(col("v")).as("nat"),
-      VectorFunctions.quantizeHof(col("v")).as("hof")).collect()
-    rows.foreach { r =>
+      VectorFunctions.quantizeHof(col("v")).as("hof"))
+    assert(TestSpark.usesCodegen(df))
+    df.collect().foreach { r =>
       assert(r.getAs[collection.Seq[Long]]("nat") == r.getAs[collection.Seq[Long]]("hof"))
     }
   }
@@ -29,30 +30,30 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     def vec() = Seq.fill(16)(rnd.nextLong() % 1000000L)
     val pairs = Seq.tabulate(60)(i => (i.toLong, vec(), vec()))
-    val rows = pairs.toDF("id", "a", "b").select(
+    val df = TestSpark.nonLocal(pairs.toDF("id", "a", "b")).select(
       VectorFunctions.dotExact(col("a"), col("b")).as("dn"),
       VectorFunctions.dotExactHof(col("a"), col("b")).as("dh"),
       VectorFunctions.sqDistExact(col("a"), col("b")).as("sn"),
-      VectorFunctions.sqDistExactHof(col("a"), col("b")).as("sh")).collect()
-    rows.foreach { r =>
+      VectorFunctions.sqDistExactHof(col("a"), col("b")).as("sh"))
+    assert(TestSpark.usesCodegen(df))
+    df.collect().foreach { r =>
       assert(r.getLong(0) == r.getLong(1))
       assert(r.getLong(2) == r.getLong(3))
     }
   }
 
   test("length mismatch and null element yield null, like zip_with padding") {
-    val df = Seq(
+    val df = TestSpark.nonLocal(Seq(
       (1L, Seq[java.lang.Long](1L, 2L), Seq[java.lang.Long](3L)),
       (2L, Seq[java.lang.Long](1L, null), Seq[java.lang.Long](3L, 4L)),
       (3L, null.asInstanceOf[Seq[java.lang.Long]], Seq[java.lang.Long](3L))
-    ).toDF("id", "a", "b")
-    val rows = df.select(col("id"),
+    ).toDF("id", "a", "b")).select(col("id"),
       VectorFunctions.dotExact(col("a"), col("b")).as("dn"),
       VectorFunctions.dotExactHof(col("a"), col("b")).as("dh"),
       VectorFunctions.sqDistExact(col("a"), col("b")).as("sn"),
       VectorFunctions.sqDistExactHof(col("a"), col("b")).as("sh"))
-      .orderBy("id").collect()
-    rows.foreach { r =>
+    assert(TestSpark.usesCodegen(df))
+    df.collect().foreach { r =>
       assert(r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4),
         s"id=${r.getLong(0)}")
     }
@@ -61,11 +62,12 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("sub_longs: native equals zip_with on equal lengths; null semantics") {
     val rnd = new scala.util.Random(17)
     def vec() = Seq.fill(16)(rnd.nextLong() % 2000000L)
-    val rows = Seq.tabulate(60)(i => (i.toLong, vec(), vec()))
-      .toDF("id", "a", "b").select(
+    val df = TestSpark.nonLocal(Seq.tabulate(60)(i => (i.toLong, vec(), vec()))
+      .toDF("id", "a", "b")).select(
         VectorFunctions.subExact(col("a"), col("b")).as("nat"),
-        VectorFunctions.subExactHof(col("a"), col("b")).as("hof")).collect()
-    rows.foreach { r =>
+        VectorFunctions.subExactHof(col("a"), col("b")).as("hof"))
+    assert(TestSpark.usesCodegen(df))
+    df.collect().foreach { r =>
       assert(r.getAs[collection.Seq[Long]]("nat") ==
         r.getAs[collection.Seq[Long]]("hof"))
     }

@@ -498,135 +498,133 @@ class TopologiesSpec extends AnyFunSuite {
     Seq("utf-8", "utf-8-bom", "cp1252", "utf-16le").foreach(c =>
       assert(want.exists(_.contains(c)), s"fixture never detects $c"))
 
-    TestSpark.withRocksDb {
-      // two different mid-stream splits (doc_id-ordered arrivals) must
-      // both reproduce the batch verdicts exactly
-      Seq(
-        ("webgate2", Seq(pages.take(6), pages.drop(6))),
-        ("webgate3", Seq(pages.take(4), pages.slice(4, 8), pages.drop(8)))
-      ).foreach { case (name, batches) =>
-        val in = MemoryStream[PageArrival]
-        val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
-            cap)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name)
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory(name).toString)
-          .start()
-        try {
-          batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-        val got = spark.table(name).collect().map(_.toString).sorted.toSeq
-        assert(got == want, s"$name diverged from the batch reference")
-      }
+    // two different mid-stream splits (doc_id-ordered arrivals) must
+    // both reproduce the batch verdicts exactly
+    Seq(
+      ("webgate2", Seq(pages.take(6), pages.drop(6))),
+      ("webgate3", Seq(pages.take(4), pages.slice(4, 8), pages.drop(8)))
+    ).foreach { case (name, batches) =>
+      val in = MemoryStream[PageArrival]
+      val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
+          cap)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory(name).toString)
+        .start()
+      try {
+        batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      } finally q.stop()
+      val got = spark.table(name).collect().map(_.toString).sorted.toSeq
+      assert(got == want, s"$name diverged from the batch reference")
+    }
 
-      // ROBOTS fetch gate: a disallowed URL takes dropped_robots ahead
-      // of every other verdict and does NOT claim the canonical-URL
-      // first-arrival slot — the allowed duplicate arriving AFTER the
-      // blocked one must be kept, not dropped_url_dup
-      {
-        // the robots rule targets the RAW utm-bearing fetch; the
-        // canonicalizer strips utm_* params, so docs 1 and 2 share one
-        // canonical URL while only doc 1 is robots-blocked
-        val robots = Seq(("example.com",
-          "User-agent: *\nDisallow: /p9*?*utm_*\n")).toDF("domain", "robots_txt")
-        val rules = graft.pipeline.Robots.rules(
-          robots, "domain", "robots_txt", "graftbot")
-        val in = MemoryStream[PageArrival]
-        val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
-            cap = 10, robotsRules = Some(rules))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("webgate_robots")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("webgate_rob").toString)
-          .start()
-        try {
-          // doc 1: robots-blocked raw form (same canonical URL as 2);
-          // doc 2: allowed form of the SAME canonical URL, later
-          // batch — must be KEPT (the blocked arrival left no state);
-          // doc 3: allowed, unrelated path
-          in.addData(page(1L, "https://example.com/p9/?utm_source=x&b=2",
-            good, "utf-8"))
-          q.processAllAvailable()
-          in.addData(
-            page(2L, "https://example.com/p9/?b=2", good, "utf-8"),
-            page(3L, "https://example.com/p8", good, "utf-8"))
-          q.processAllAvailable()
-        } finally q.stop()
-        val v = spark.table("webgate_robots").collect()
-          .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict"))
-          .toMap
-        assert(v(1L) == "dropped_robots")
-        assert(v(2L) == "kept",
-          "a robots-blocked arrival must not shadow a later allowed " +
-            "snapshot of the same canonical URL")
-        assert(v(3L) == "kept")
-      }
+    // ROBOTS fetch gate: a disallowed URL takes dropped_robots ahead
+    // of every other verdict and does NOT claim the canonical-URL
+    // first-arrival slot — the allowed duplicate arriving AFTER the
+    // blocked one must be kept, not dropped_url_dup
+    {
+      // the robots rule targets the RAW utm-bearing fetch; the
+      // canonicalizer strips utm_* params, so docs 1 and 2 share one
+      // canonical URL while only doc 1 is robots-blocked
+      val robots = Seq(("example.com",
+        "User-agent: *\nDisallow: /p9*?*utm_*\n")).toDF("domain", "robots_txt")
+      val rules = graft.pipeline.Robots.rules(
+        robots, "domain", "robots_txt", "graftbot")
+      val in = MemoryStream[PageArrival]
+      val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
+          cap = 10, robotsRules = Some(rules))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("webgate_robots")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("webgate_rob").toString)
+        .start()
+      try {
+        // doc 1: robots-blocked raw form (same canonical URL as 2);
+        // doc 2: allowed form of the SAME canonical URL, later
+        // batch — must be KEPT (the blocked arrival left no state);
+        // doc 3: allowed, unrelated path
+        in.addData(page(1L, "https://example.com/p9/?utm_source=x&b=2",
+          good, "utf-8"))
+        q.processAllAvailable()
+        in.addData(
+          page(2L, "https://example.com/p9/?b=2", good, "utf-8"),
+          page(3L, "https://example.com/p8", good, "utf-8"))
+        q.processAllAvailable()
+      } finally q.stop()
+      val v = spark.table("webgate_robots").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict"))
+        .toMap
+      assert(v(1L) == "dropped_robots")
+      assert(v(2L) == "kept",
+        "a robots-blocked arrival must not shadow a later allowed " +
+          "snapshot of the same canonical URL")
+      assert(v(3L) == "kept")
+    }
 
-      // BOUNDED-STATE (TTL) mode. TimeMode.ProcessingTime makes the
-      // micro-batch engine trigger continuously (timer/TTL sweeps), so
-      // processAllAvailable never sees an idle query — the TTL
-      // sub-tests poll the sink for the expected row count instead.
-      def awaitRows(tbl: String, n: Long): Unit = {
-        val deadline = System.currentTimeMillis + 120000L
-        while (spark.table(tbl).count() < n &&
-            System.currentTimeMillis < deadline)
-          Thread.sleep(100)
-        assert(spark.table(tbl).count() >= n, s"$tbl stuck below $n rows")
-      }
+    // BOUNDED-STATE (TTL) mode. TimeMode.ProcessingTime makes the
+    // micro-batch engine trigger continuously (timer/TTL sweeps), so
+    // processAllAvailable never sees an idle query — the TTL
+    // sub-tests poll the sink for the expected row count instead.
+    def awaitRows(tbl: String, n: Long): Unit = {
+      val deadline = System.currentTimeMillis + 120000L
+      while (spark.table(tbl).count() < n &&
+          System.currentTimeMillis < deadline)
+        Thread.sleep(100)
+      assert(spark.table(tbl).count() >= n, s"$tbl stuck below $n rows")
+    }
 
-      // within the TTL horizon the gate's verdicts are IDENTICAL to
-      // the unbounded gate across a mid-stream split (the documented
-      // deviation only begins past expiry)
-      {
-        val in = MemoryStream[PageArrival]
-        val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
-            cap, urlTtl = Some(java.time.Duration.ofHours(1)))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("webgate_ttl")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("webgate_ttl").toString)
-          .start()
-        try {
-          in.addData(pages.take(6)); awaitRows("webgate_ttl", 6L)
-          in.addData(pages.drop(6)); awaitRows("webgate_ttl", 12L)
-        } finally q.stop()
-        assert(spark.table("webgate_ttl").collect()
-          .map(_.toString).sorted.toSeq == want,
-          "TTL gate diverged from the unbounded gate within the horizon")
-      }
+    // within the TTL horizon the gate's verdicts are IDENTICAL to
+    // the unbounded gate across a mid-stream split (the documented
+    // deviation only begins past expiry)
+    {
+      val in = MemoryStream[PageArrival]
+      val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
+          cap, urlTtl = Some(java.time.Duration.ofHours(1)))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("webgate_ttl")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("webgate_ttl").toString)
+        .start()
+      try {
+        in.addData(pages.take(6)); awaitRows("webgate_ttl", 6L)
+        in.addData(pages.drop(6)); awaitRows("webgate_ttl", 12L)
+      } finally q.stop()
+      assert(spark.table("webgate_ttl").collect()
+        .map(_.toString).sorted.toSeq == want,
+        "TTL gate diverged from the unbounded gate within the horizon")
+    }
 
-      // past the horizon, a re-arriving URL is a FIRST arrival again
-      // (the documented re-crawl re-admission deviation) — the same
-      // URL resent after expiry must NOT be dropped_url_dup
-      {
-        val in = MemoryStream[PageArrival]
-        val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
-            cap = 10, urlTtl = Some(java.time.Duration.ofSeconds(8)))
-          .writeStream.outputMode("append").format("memory")
-          .queryName("webgate_expire")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("webgate_exp").toString)
-          .start()
-        try {
-          // docs 1+2 land in ONE addData block → one micro-batch, so
-          // the within-horizon dup verdict is clock-independent
-          in.addData(Seq(
-            page(1L, "https://example.com/r1", good, "utf-8"),
-            page(2L, "https://example.com/r1", good, "utf-8")))
-          awaitRows("webgate_expire", 2L)
-          Thread.sleep(20000) // let the URL entry expire (8 s TTL)
-          in.addData(page(3L, "https://example.com/r1", good, "utf-8"))
-          awaitRows("webgate_expire", 3L)
-        } finally q.stop()
-        val verdicts = spark.table("webgate_expire").collect()
-          .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict"))
-          .toMap
-        assert(verdicts(1L) == "kept")
-        assert(verdicts(2L) == "dropped_url_dup")
-        assert(verdicts(3L) == "kept",
-          "post-expiry re-arrival must be re-admitted (bounded-state mode)")
-      }
+    // past the horizon, a re-arriving URL is a FIRST arrival again
+    // (the documented re-crawl re-admission deviation) — the same
+    // URL resent after expiry must NOT be dropped_url_dup
+    {
+      val in = MemoryStream[PageArrival]
+      val q = WebIngestStream.gate(in.toDS(), terms, phrases, suffixes,
+          cap = 10, urlTtl = Some(java.time.Duration.ofSeconds(8)))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("webgate_expire")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("webgate_exp").toString)
+        .start()
+      try {
+        // docs 1+2 land in ONE addData block → one micro-batch, so
+        // the within-horizon dup verdict is clock-independent
+        in.addData(Seq(
+          page(1L, "https://example.com/r1", good, "utf-8"),
+          page(2L, "https://example.com/r1", good, "utf-8")))
+        awaitRows("webgate_expire", 2L)
+        Thread.sleep(20000) // let the URL entry expire (8 s TTL)
+        in.addData(page(3L, "https://example.com/r1", good, "utf-8"))
+        awaitRows("webgate_expire", 3L)
+      } finally q.stop()
+      val verdicts = spark.table("webgate_expire").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict"))
+        .toMap
+      assert(verdicts(1L) == "kept")
+      assert(verdicts(2L) == "dropped_url_dup")
+      assert(verdicts(3L) == "kept",
+        "post-expiry re-arrival must be re-admitted (bounded-state mode)")
     }
   }
 
@@ -665,36 +663,34 @@ class TopologiesSpec extends AnyFunSuite {
       rec("https://Example.COM:443/pa?utm_source=x", "200 OK", good) ++
       rec("https://example.com/pc", "200 OK", good)
 
-    TestSpark.withRocksDb {
-      val in = MemoryStream[(Long, Array[Byte])]
-      val q = WebIngestStream.gate(
-          WebIngestStream.fromWarc(in.toDF()
-            .toDF("container_id", "warc"), "container_id", "warc"),
-          terms = Seq("merge"), phrases = Seq("sort order"),
-          suffixes = Seq("com", "org"), cap = 10)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("warcgate")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("warcgate").toString)
-        .start()
-      try {
-        in.addData((0L, c0))
-        q.processAllAvailable()
-        in.addData((1L, c1))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("warcgate").collect()
-        .map(r => r.getAs[String]("canon_url") -> r.getAs[String]("verdict"))
-      // the 404 record never enters the gate; pa's second (canonical-
-      // equal) arrival in container 1 is a url dup
-      assert(got.length == 4)
-      val byUrl = got.groupBy(_._1).map { case (k, v) =>
-        k -> v.map(_._2).sorted.toSeq }
-      assert(byUrl("https://example.com/pa") ==
-        Seq("dropped_url_dup", "kept"))
-      assert(byUrl("https://example.com/pb") == Seq("dropped_blocklist"))
-      assert(byUrl("https://example.com/pc") == Seq("kept"))
-      assert(!byUrl.keySet.exists(_.contains("gone")))
-    }
+    val in = MemoryStream[(Long, Array[Byte])]
+    val q = WebIngestStream.gate(
+        WebIngestStream.fromWarc(in.toDF()
+          .toDF("container_id", "warc"), "container_id", "warc"),
+        terms = Seq("merge"), phrases = Seq("sort order"),
+        suffixes = Seq("com", "org"), cap = 10)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("warcgate")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("warcgate").toString)
+      .start()
+    try {
+      in.addData((0L, c0))
+      q.processAllAvailable()
+      in.addData((1L, c1))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("warcgate").collect()
+      .map(r => r.getAs[String]("canon_url") -> r.getAs[String]("verdict"))
+    // the 404 record never enters the gate; pa's second (canonical-
+    // equal) arrival in container 1 is a url dup
+    assert(got.length == 4)
+    val byUrl = got.groupBy(_._1).map { case (k, v) =>
+      k -> v.map(_._2).sorted.toSeq }
+    assert(byUrl("https://example.com/pa") ==
+      Seq("dropped_url_dup", "kept"))
+    assert(byUrl("https://example.com/pb") == Seq("dropped_blocklist"))
+    assert(byUrl("https://example.com/pc") == Seq("kept"))
+    assert(!byUrl.keySet.exists(_.contains("gone")))
   }
 }

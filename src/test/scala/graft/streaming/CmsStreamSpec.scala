@@ -26,20 +26,18 @@ class CmsStreamSpec extends AnyFunSuite {
     val updates = Sketches.cmsHashed(items, "token")
       .collect().map(r => CmsStream.CounterUpdate(
         r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[CmsStream.CounterUpdate]
-      val query = CmsStream.counters(stream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("cms_stream")
-        .option("checkpointLocation", Files.createTempDirectory("cms_ckpt").toString)
-        .start()
-      try {
-        val shuffled = rnd.shuffle(updates.toVector)
-        stream.addData(shuffled.take(4000)); query.processAllAvailable()
-        stream.addData(shuffled.slice(4000, 15000)); query.processAllAvailable()
-        stream.addData(shuffled.drop(15000)); query.processAllAvailable()
-      } finally query.stop()
-    }
+    val stream = MemoryStream[CmsStream.CounterUpdate]
+    val query = CmsStream.counters(stream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("cms_stream")
+      .option("checkpointLocation", Files.createTempDirectory("cms_ckpt").toString)
+      .start()
+    try {
+      val shuffled = rnd.shuffle(updates.toVector)
+      stream.addData(shuffled.take(4000)); query.processAllAvailable()
+      stream.addData(shuffled.slice(4000, 15000)); query.processAllAvailable()
+      stream.addData(shuffled.drop(15000)); query.processAllAvailable()
+    } finally query.stop()
     val rows = spark.table("cms_stream")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val finalCounters = rows.groupBy(t => (t._1, t._2))

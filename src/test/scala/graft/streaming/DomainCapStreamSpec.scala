@@ -23,19 +23,17 @@ class DomainCapStreamSpec extends AnyFunSuite {
     val batch2 = Seq((11L, "a.com"), (13L, "a.com"), (14L, "a.com"),
       (21L, "b.org")).map((DomainCapStream.DocArrival.apply _).tupled)
 
-    graft.TestSpark.withRocksDb {
-      val in = MemoryStream[DomainCapStream.DocArrival]
-      val q = DomainCapStream.admissions(in.toDS(), cap = 3)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("domcap_stream")
-        .option("checkpointLocation",
-          Files.createTempDirectory("domcap_ckpt").toString)
-        .start()
-      try {
-        in.addData(batch1); q.processAllAvailable()
-        in.addData(batch2); q.processAllAvailable()
-      } finally q.stop()
-    }
+    val in = MemoryStream[DomainCapStream.DocArrival]
+    val q = DomainCapStream.admissions(in.toDS(), cap = 3)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("domcap_stream")
+      .option("checkpointLocation",
+        Files.createTempDirectory("domcap_ckpt").toString)
+      .start()
+    try {
+      in.addData(batch1); q.processAllAvailable()
+      in.addData(batch2); q.processAllAvailable()
+    } finally q.stop()
     val got = spark.table("domcap_stream")
       .collect().map(r => (r.getLong(0),
         (r.getString(1), r.getLong(2), r.getBoolean(3)))).toMap

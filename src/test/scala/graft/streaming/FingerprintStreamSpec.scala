@@ -37,27 +37,25 @@ class FingerprintStreamSpec extends AnyFunSuite {
         maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    graft.TestSpark.withRocksDb {
-      val mediaStream = MemoryStream[Multimodal.MediaRecord]
-      val bands = Multimodal.fingerprintBands(
-          Multimodal.dHashes(mediaStream.toDS()).toDF())
-        .select(col("media_id").as("doc_id"), col("band").cast("int").as("band"),
-          col("bval").cast("string").as("band_key"))
-        .as[NearDupStream.BandRow]
-      val q = NearDupStream.candidates(bands)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("fp_cands")
-        .option("checkpointLocation", Files.createTempDirectory("fp_ckpt").toString)
-        .start()
-      try {
-        // split every planted (2k, 2k+1) pair ACROSS the batch boundary:
-        // the match must come from RocksDB state, not within-batch luck
-        mediaStream.addData(media.filter(_.media_id % 2 == 0))
-        q.processAllAvailable()
-        mediaStream.addData(media.filter(_.media_id % 2 != 0))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
+    val mediaStream = MemoryStream[Multimodal.MediaRecord]
+    val bands = Multimodal.fingerprintBands(
+        Multimodal.dHashes(mediaStream.toDS()).toDF())
+      .select(col("media_id").as("doc_id"), col("band").cast("int").as("band"),
+        col("bval").cast("string").as("band_key"))
+      .as[NearDupStream.BandRow]
+    val q = NearDupStream.candidates(bands)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("fp_cands")
+      .option("checkpointLocation", Files.createTempDirectory("fp_ckpt").toString)
+      .start()
+    try {
+      // split every planted (2k, 2k+1) pair ACROSS the batch boundary:
+      // the match must come from RocksDB state, not within-batch luck
+      mediaStream.addData(media.filter(_.media_id % 2 == 0))
+      q.processAllAvailable()
+      mediaStream.addData(media.filter(_.media_id % 2 != 0))
+      q.processAllAvailable()
+    } finally q.stop()
 
     def ham(a: (Long, Long), b: (Long, Long)): Int =
       java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)

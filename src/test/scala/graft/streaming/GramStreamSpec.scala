@@ -31,20 +31,18 @@ class GramStreamSpec extends AnyFunSuite {
     val vecs = data.map { case (_, e) =>
       GramStream.QuantVec("all", e.map(x => math.floor(x.toDouble * 1e6).toLong))
     }
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[GramStream.QuantVec]
-      val query = GramStream.running(stream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("gram_stream")
-        .option("checkpointLocation", Files.createTempDirectory("gr_ckpt").toString)
-        .start()
-      try {
-        val shuffled = rnd.shuffle(vecs.toVector)
-        stream.addData(shuffled.take(80)); query.processAllAvailable()
-        stream.addData(shuffled.slice(80, 200)); query.processAllAvailable()
-        stream.addData(shuffled.drop(200)); query.processAllAvailable()
-      } finally query.stop()
-    }
+    val stream = MemoryStream[GramStream.QuantVec]
+    val query = GramStream.running(stream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("gram_stream")
+      .option("checkpointLocation", Files.createTempDirectory("gr_ckpt").toString)
+      .start()
+    try {
+      val shuffled = rnd.shuffle(vecs.toVector)
+      stream.addData(shuffled.take(80)); query.processAllAvailable()
+      stream.addData(shuffled.slice(80, 200)); query.processAllAvailable()
+      stream.addData(shuffled.drop(200)); query.processAllAvailable()
+    } finally query.stop()
     val rows = spark.table("gram_stream").collect()
       .map(r => (r.getInt(1), r.getInt(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
@@ -64,25 +62,22 @@ class GramStreamSpec extends AnyFunSuite {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(rounded == bcov, s"cov ($i,$j)")
     }
-    // the overflow guard fails the query instead of wrapping: provider
-    // set BEFORE start so the failure can only be the require (its
+    // the overflow guard fails the query instead of wrapping (its
     // message is asserted, not just any exception)
-    graft.TestSpark.withRocksDb {
-      val stream2 = MemoryStream[GramStream.QuantVec]
-      val q2 = GramStream.running(stream2.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("gram_stream_guard")
-        .option("checkpointLocation", Files.createTempDirectory("gr2_ckpt").toString)
-        .start()
-      try {
-        stream2.addData(Seq(GramStream.QuantVec("g", Seq(3000000000L, 0L))))
-        val e = intercept[Exception] { q2.processAllAvailable() }
-        def messages(t: Throwable): Seq[String] =
-          if (t == null) Nil
-          else Option(t.getMessage).toSeq ++ messages(t.getCause)
-        assert(messages(e).exists(_.contains("risks int64 overflow")),
-          messages(e).mkString(" | "))
-      } finally q2.stop()
-    }
+    val stream2 = MemoryStream[GramStream.QuantVec]
+    val q2 = GramStream.running(stream2.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("gram_stream_guard")
+      .option("checkpointLocation", Files.createTempDirectory("gr2_ckpt").toString)
+      .start()
+    try {
+      stream2.addData(Seq(GramStream.QuantVec("g", Seq(3000000000L, 0L))))
+      val e = intercept[Exception] { q2.processAllAvailable() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(_.contains("risks int64 overflow")),
+        messages(e).mkString(" | "))
+    } finally q2.stop()
   }
 }

@@ -28,21 +28,19 @@ class HllStreamSpec extends AnyFunSuite {
     val hashed = Sketches.hllHashed(items, "g", "item")
       .collect().map(r => HllStream.HashedItem(
         r.getString(0), r.getLong(1), r.getLong(2)))
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[HllStream.HashedItem]
-      val query = HllStream.estimates(stream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("hll_stream")
-        .option("checkpointLocation", Files.createTempDirectory("hll_ckpt").toString)
-        .start()
-      try {
-        // three uneven micro-batches in a scrambled order
-        val shuffled = rnd.shuffle(hashed.toVector)
-        stream.addData(shuffled.take(500)); query.processAllAvailable()
-        stream.addData(shuffled.slice(500, 2100)); query.processAllAvailable()
-        stream.addData(shuffled.drop(2100)); query.processAllAvailable()
-      } finally query.stop()
-    }
+    val stream = MemoryStream[HllStream.HashedItem]
+    val query = HllStream.estimates(stream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("hll_stream")
+      .option("checkpointLocation", Files.createTempDirectory("hll_ckpt").toString)
+      .start()
+    try {
+      // three uneven micro-batches in a scrambled order
+      val shuffled = rnd.shuffle(hashed.toVector)
+      stream.addData(shuffled.take(500)); query.processAllAvailable()
+      stream.addData(shuffled.slice(500, 2100)); query.processAllAvailable()
+      stream.addData(shuffled.drop(2100)); query.processAllAvailable()
+    } finally query.stop()
     val rows = spark.table("hll_stream")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getLong(5)))

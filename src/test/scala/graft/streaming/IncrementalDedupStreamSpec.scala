@@ -54,28 +54,26 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
       .map(r => NearDupStream.BandRow(r.getLong(0), r.getInt(1), r.getString(2)))
       .sortBy(_.doc_id)
 
-    graft.TestSpark.withRocksDb {
-      val hashStream = MemoryStream[IncrementalDedupStream.HashedDoc]
-      val bandStream = MemoryStream[NearDupStream.BandRow]
-      val hashQ = IncrementalDedupStream.exactDups(hashStream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("incdedup_exact")
-        .option("checkpointLocation", Files.createTempDirectory("ide_ckpt").toString)
-        .start()
-      val bandQ = NearDupStream.candidates(bandStream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("incdedup_bands")
-        .option("checkpointLocation", Files.createTempDirectory("idb_ckpt").toString)
-        .start()
-      try {
-        hashStream.addData(hashed.filter(h => oldIds(h.doc_id)))
-        bandStream.addData(banded.filter(b => oldIds(b.doc_id)))
-        hashQ.processAllAvailable(); bandQ.processAllAvailable()
-        hashStream.addData(hashed.filter(h => newIds(h.doc_id)))
-        bandStream.addData(banded.filter(b => newIds(b.doc_id)))
-        hashQ.processAllAvailable(); bandQ.processAllAvailable()
-      } finally { hashQ.stop(); bandQ.stop() }
-    }
+    val hashStream = MemoryStream[IncrementalDedupStream.HashedDoc]
+    val bandStream = MemoryStream[NearDupStream.BandRow]
+    val hashQ = IncrementalDedupStream.exactDups(hashStream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("incdedup_exact")
+      .option("checkpointLocation", Files.createTempDirectory("ide_ckpt").toString)
+      .start()
+    val bandQ = NearDupStream.candidates(bandStream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("incdedup_bands")
+      .option("checkpointLocation", Files.createTempDirectory("idb_ckpt").toString)
+      .start()
+    try {
+      hashStream.addData(hashed.filter(h => oldIds(h.doc_id)))
+      bandStream.addData(banded.filter(b => oldIds(b.doc_id)))
+      hashQ.processAllAvailable(); bandQ.processAllAvailable()
+      hashStream.addData(hashed.filter(h => newIds(h.doc_id)))
+      bandStream.addData(banded.filter(b => newIds(b.doc_id)))
+      hashQ.processAllAvailable(); bandQ.processAllAvailable()
+    } finally { hashQ.stop(); bandQ.stop() }
 
     // exact arm: new doc whose canonical first-seen is an OLD doc
     val gotExact = spark.table("incdedup_exact")
@@ -108,29 +106,27 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ckpt = Files.createTempDirectory("restart_ckpt").toString
     val outDir = Files.createTempDirectory("restart_out").toString
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[IncrementalDedupStream.HashedDoc]
-      // parquet sink: the memory sink refuses checkpoint recovery, and a
-      // real deployment's file/Kafka sink is exactly what W6's
-      // at-least-once-with-checkpoint claim is about
-      def start() = IncrementalDedupStream.exactDups(stream.toDS())
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .start()
-      val q1 = start()
-      stream.addData(Seq(
-        IncrementalDedupStream.HashedDoc(1L, "h1"),
-        IncrementalDedupStream.HashedDoc(2L, "h2")))
-      q1.processAllAvailable()
-      q1.stop() // simulated process death after checkpoint commit
-      val q2 = start()
-      stream.addData(Seq(
-        IncrementalDedupStream.HashedDoc(3L, "h1"),   // dup of RESTORED 1
-        IncrementalDedupStream.HashedDoc(4L, "h3")))
-      q2.processAllAvailable()
-      q2.stop()
-    }
+    val stream = MemoryStream[IncrementalDedupStream.HashedDoc]
+    // parquet sink: the memory sink refuses checkpoint recovery, and a
+    // real deployment's file/Kafka sink is exactly what W6's
+    // at-least-once-with-checkpoint claim is about
+    def start() = IncrementalDedupStream.exactDups(stream.toDS())
+      .writeStream.outputMode("append").format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ckpt)
+      .start()
+    val q1 = start()
+    stream.addData(Seq(
+      IncrementalDedupStream.HashedDoc(1L, "h1"),
+      IncrementalDedupStream.HashedDoc(2L, "h2")))
+    q1.processAllAvailable()
+    q1.stop() // simulated process death after checkpoint commit
+    val q2 = start()
+    stream.addData(Seq(
+      IncrementalDedupStream.HashedDoc(3L, "h1"),   // dup of RESTORED 1
+      IncrementalDedupStream.HashedDoc(4L, "h3")))
+    q2.processAllAvailable()
+    q2.stop()
     val events = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(events == Set((3L, 1L)),
@@ -145,23 +141,21 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ckpt = Files.createTempDirectory("nd_restart_ckpt").toString
     val outDir = Files.createTempDirectory("nd_restart_out").toString
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[NearDupStream.BandRow]
-      def start() = NearDupStream.candidates(stream.toDS())
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .start()
-      val q1 = start()
-      stream.addData(Seq(NearDupStream.BandRow(1L, 0, "b"),
-        NearDupStream.BandRow(2L, 0, "b")))
-      q1.processAllAvailable()
-      q1.stop()
-      val q2 = start()
-      stream.addData(Seq(NearDupStream.BandRow(3L, 0, "b")))
-      q2.processAllAvailable()
-      q2.stop()
-    }
+    val stream = MemoryStream[NearDupStream.BandRow]
+    def start() = NearDupStream.candidates(stream.toDS())
+      .writeStream.outputMode("append").format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ckpt)
+      .start()
+    val q1 = start()
+    stream.addData(Seq(NearDupStream.BandRow(1L, 0, "b"),
+      NearDupStream.BandRow(2L, 0, "b")))
+    q1.processAllAvailable()
+    q1.stop()
+    val q2 = start()
+    stream.addData(Seq(NearDupStream.BandRow(3L, 0, "b")))
+    q2.processAllAvailable()
+    q2.stop()
     val pairs = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // (1,2) within batch 1; (1,3) and (2,3) require the RESTORED list
@@ -184,36 +178,34 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     assert(batchWant == Set((1L, 2L), (1L, 3L), (2L, 3L)),
       "hot bucket must be fully excluded by the batch guard")
 
-    graft.TestSpark.withRocksDb {
-      // two different batch splits: overflow lands mid-bucket in one and
-      // on a later batch in the other — the net set must not care
-      val splits = Seq(
-        Seq(rows.filter(_.doc_id <= 11), rows.filter(_.doc_id > 11)),
-        Seq(rows.take(3), rows.slice(3, 9), rows.drop(9)))
-      splits.zipWithIndex.foreach { case (batches, i) =>
-        val stream = MemoryStream[NearDupStream.BandRow]
-        val q = NearDupStream.candidates(stream.toDS(), maxBucket = cap)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(s"nd_tomb_$i")
-          .option("checkpointLocation",
-            Files.createTempDirectory(s"ndt_ckpt_$i").toString)
-          .start()
-        try {
-          batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-        } finally {
-          q.stop()
-        }
-        val emitted = spark.table(s"nd_tomb_$i")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-            r.getBoolean(3)))
-        val tombs = emitted.collect { case (a, b, band, true) => (a, b, band) }.toSet
-        val net = emitted.collect { case (a, b, band, false) => (a, b, band) }
-          .filterNot(tombs).map { case (a, b, _) => (a, b) }.toSet
-        // split 0 fills "hot" to 2 before overflow -> at least one
-        // retraction must have been exercised
-        if (i == 0) assert(tombs.nonEmpty, "overflow must emit retractions")
-        assert(net == batchWant, s"split $i")
+    // two different batch splits: overflow lands mid-bucket in one and
+    // on a later batch in the other — the net set must not care
+    val splits = Seq(
+      Seq(rows.filter(_.doc_id <= 11), rows.filter(_.doc_id > 11)),
+      Seq(rows.take(3), rows.slice(3, 9), rows.drop(9)))
+    splits.zipWithIndex.foreach { case (batches, i) =>
+      val stream = MemoryStream[NearDupStream.BandRow]
+      val q = NearDupStream.candidates(stream.toDS(), maxBucket = cap)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(s"nd_tomb_$i")
+        .option("checkpointLocation",
+          Files.createTempDirectory(s"ndt_ckpt_$i").toString)
+        .start()
+      try {
+        batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+      } finally {
+        q.stop()
       }
+      val emitted = spark.table(s"nd_tomb_$i")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getBoolean(3)))
+      val tombs = emitted.collect { case (a, b, band, true) => (a, b, band) }.toSet
+      val net = emitted.collect { case (a, b, band, false) => (a, b, band) }
+        .filterNot(tombs).map { case (a, b, _) => (a, b) }.toSet
+      // split 0 fills "hot" to 2 before overflow -> at least one
+      // retraction must have been exercised
+      if (i == 0) assert(tombs.nonEmpty, "overflow must emit retractions")
+      assert(net == batchWant, s"split $i")
     }
   }
 }

@@ -421,22 +421,20 @@ class StreamingSpec extends AnyFunSuite {
     val rows = banded.collect()
       .map(r => NearDupStream.BandRow(r.getLong(0), r.getInt(1), r.getString(2)))
       .sortBy(_.doc_id)
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[NearDupStream.BandRow]
-      val query = NearDupStream.candidates(stream.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("neardup_stream")
-        .option("checkpointLocation",
-          Files.createTempDirectory("nd_ckpt").toString)
-        .start()
-      try {
-        // split so doc 1+2 arrive first and doc 3 lands in a LATER batch:
-        // its pairs must come from state, not the batch
-        val (b1, b2) = rows.partition(_.doc_id <= 2L)
-        stream.addData(b1); query.processAllAvailable()
-        stream.addData(b2); query.processAllAvailable()
-      } finally query.stop()
-    }
+    val stream = MemoryStream[NearDupStream.BandRow]
+    val query = NearDupStream.candidates(stream.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("neardup_stream")
+      .option("checkpointLocation",
+        Files.createTempDirectory("nd_ckpt").toString)
+      .start()
+    try {
+      // split so doc 1+2 arrive first and doc 3 lands in a LATER batch:
+      // its pairs must come from state, not the batch
+      val (b1, b2) = rows.partition(_.doc_id <= 2L)
+      stream.addData(b1); query.processAllAvailable()
+      stream.addData(b2); query.processAllAvailable()
+    } finally query.stop()
     val got = spark.table("neardup_stream")
       .select("doc_a", "doc_b").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -457,22 +455,19 @@ class StreamingSpec extends AnyFunSuite {
       TokenEvent(0L, "window"), TokenEvent(0L, "join"), TokenEvent(0L, "spark"),
       // window 1: tie join=scan=1 → lexicographic rank: join, scan
       TokenEvent(W, "scan"), TokenEvent(W, "join"))
-    // transformWithState runs only on the RocksDB state store
-    graft.TestSpark.withRocksDb {
-      val stream = MemoryStream[TokenEvent]
-      val query = TrendingTopKStream.topTokens(stream.toDS(), k = 3)
-        .writeStream.outputMode("update").format("memory")
-        .queryName("topk_stream")
-        .option("checkpointLocation",
-          Files.createTempDirectory("topk_ckpt").toString)
-        .start()
-      try {
-        // split window 0 across batches: the second batch must see the
-        // first batch's counts from state, not restart at zero
-        stream.addData(evs.take(3)); query.processAllAvailable()
-        stream.addData(evs.drop(3)); query.processAllAvailable()
-      } finally query.stop()
-    }
+    val stream = MemoryStream[TokenEvent]
+    val query = TrendingTopKStream.topTokens(stream.toDS(), k = 3)
+      .writeStream.outputMode("update").format("memory")
+      .queryName("topk_stream")
+      .option("checkpointLocation",
+        Files.createTempDirectory("topk_ckpt").toString)
+      .start()
+    try {
+      // split window 0 across batches: the second batch must see the
+      // first batch's counts from state, not restart at zero
+      stream.addData(evs.take(3)); query.processAllAvailable()
+      stream.addData(evs.drop(3)); query.processAllAvailable()
+    } finally query.stop()
     val rows = spark.table("topk_stream").as[TopKRow].collect()
     // window 0 was touched by two batches → generations 1 and 2; the
     // final generation supersedes (the downstream-upsert contract)
